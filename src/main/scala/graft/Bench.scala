@@ -87,6 +87,58 @@ object Bench {
       case c             => c.toString
     }
 
+  /** `v` to `digits` decimals with a '.' separator whatever the default
+    * locale: a comma-decimal locale (de_DE) would otherwise print `12,34`
+    * and break every JSON line the bench writes. */
+  private[graft] def num(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Characters the compact line's "queries" entries may take, the comma
+    * separators included (the braces and the fixed keys around them are
+    * not counted). */
+  val CompactQueriesBudget = 1720
+
+  /** The two contract lines, in print order.
+    *
+    * Full line: every query's seconds, the errors, the run's `env` JSON
+    * object and the contended-query notes. 2-decimal seconds: the raw
+    * Double.toString rendering inflated the full line to ~8 KB, far past
+    * a 2000-char stdout-tail capture; 10 ms resolution is below the
+    * host-noise floor anyway, and the same full line also lands in the
+    * diag sidecar (bench_diag.jsonl) for complete per-query archival.
+    *
+    * Compact line: the full line is still several KB at 203 queries —
+    * beyond a 2 000-char stdout tail capture (measured: the r15 BENCH
+    * artifact's tail field is exactly 2000 chars). Repeat the contract
+    * shape as a compact LAST line: same keys, but "queries" holds only
+    * the slowest entries that fit [[CompactQueriesBudget]] (they're the
+    * ones read first; the full map is one line up for anyone with the
+    * whole log, and in the diag sidecar). Budget 1720 (was 1500): the
+    * tail capture holds 2000 chars and the line's fixed wrapper + sbt's
+    * trailing "[success] Total time: ..." line leave ~1800 usable — 1720
+    * keeps a safety margin while widening the visible window by ~10
+    * rows. */
+  private[graft] def contractLines(queries: Seq[(String, Double)],
+      errors: collection.Map[String, String], envJson: String,
+      contended: collection.Map[String, String], sfDir: String): (String, String) = {
+    def obj(m: collection.Map[String, String]) =
+      m.map { case (k, v) => s"\"$k\":\"${escape(v)}\"" }.mkString("{", ",", "}")
+    def entry(k: String, v: Double) = s""""$k":${num(v, 2)}"""
+    val total = queries.map(_._2).sum
+    val qs = queries.map { case (k, v) => entry(k, v) }.mkString("{", ",", "}")
+    val fullLine = s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","queries":$qs,"errors":${obj(errors)},"env":$envJson,"contended":${obj(contended)},"sf":"$sfDir"}"""
+    val compactQs = {
+      val sb = new StringBuilder
+      for ((k, v) <- queries.sortBy(-_._2)) {
+        val piece = (if (sb.isEmpty) "" else ",") + entry(k, v)
+        if (sb.length + piece.length <= CompactQueriesBudget) sb.append(piece)
+      }
+      "{" + sb.result() + "}"
+    }
+    val compactLine = s"""{"metric":"total","value":${num(total, 1)},"unit":"sec","n":${queries.size},"n_errors":${errors.size},"queries":$compactQs,"sf":"$sfDir"}"""
+    (fullLine, compactLine)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -145,7 +197,7 @@ object Bench {
       // for the network database, once per JVM) is billed to diag, not
       // to the query — the production path scans an existing database
       val seedS = graft.engine.MgiDb.drainSeedNanos() / 1e9
-      if (seedS > 0.001) diag(name) = f"derby_seed=$seedS%.1f"
+      if (seedS > 0.001) diag(name) = s"derby_seed=${num(seedS, 1)}"
       // clamp at 0: a drained seed can only overlap this query's wall
       // time, so a negative residue would mean misattributed seed time
       val dt = math.max(0.0, (System.nanoTime() - t0) / 1e9 - seedS)
@@ -156,12 +208,12 @@ object Bench {
       val otherS = math.max(0.0, (busy1 - busy0) / hz - procS) // other processes' CPU
       val rt = Runtime.getRuntime
       System.err.println(f"[diag] $name%-28s $dt%8.2fs cpu=$procS%7.1fs steal=$stealS%6.1fs iowait=$ioS%5.1fs otherproc=$otherS%6.1fs heap=${(rt.totalMemory - rt.freeMemory) / (1 << 20)}%5dM codecache=${poolUsed("Code") / (1 << 20)}%4dM gc+=${gcMillis - gc0}%5dms jit+=${jitMillis - jit0}%6dms")
-      diagLine(f"""{"q":"$name","pass":1,"wall_s":$dt%.2f,"cpu_s":$procS%.1f,"steal_s":$stealS%.1f,"iowait_s":$ioS%.1f,"otherproc_s":$otherS%.1f,"gc_ms":${gcMillis - gc0},"jit_ms":${jitMillis - jit0},"seed_s":$seedS%.1f}""")
+      diagLine(s"""{"q":"$name","pass":1,"wall_s":${num(dt, 2)},"cpu_s":${num(procS, 1)},"steal_s":${num(stealS, 1)},"iowait_s":${num(ioS, 1)},"otherproc_s":${num(otherS, 1)},"gc_ms":${gcMillis - gc0},"jit_ms":${jitMillis - jit0},"seed_s":${num(seedS, 1)}}""")
       // flag queries whose wall clock is dominated by something other
       // than this process's own CPU (host steal, iowait, co-tenants):
       // > 2 s AND process CPU under half of (wall × cores-busy-equivalent)
       if (dt > 2.0 && (stealS + ioS + otherS) > procS)
-        diag(name) = f"wall=$dt%.1f,cpu=$procS%.1f,steal=$stealS%.1f,iowait=$ioS%.1f,otherproc=$otherS%.1f"
+        diag(name) = s"wall=${num(dt, 1)},cpu=${num(procS, 1)},steal=${num(stealS, 1)},iowait=${num(ioS, 1)},otherproc=${num(otherS, 1)}"
       // untimed inter-query hygiene: drop finished queries' cached
       // relations (queries are independent) through the CacheManager so
       // the catalog entry and its RDD blocks go together. No System.gc():
@@ -187,7 +239,7 @@ object Bench {
                catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      diagLine(f"""{"q":"$name","pass":$pass,"wall_s":$dt%.2f,"ok":$ok}""")
+      diagLine(s"""{"q":"$name","pass":$pass,"wall_s":${num(dt, 2)},"ok":$ok}""")
       if (ok) dt else Double.MaxValue
     }
     // 1.0 s threshold: a contended window inflates the many 1–3 s
@@ -204,7 +256,7 @@ object Bench {
         // pass2 10.3 s, clean 1.6 s) — one bounded third attempt when the
         // min is still above any clean per-query time (clean max ≈ 3.4 s)
         val dt3 = if (math.min(dt1, dt2) > 4.0) rerun(name, 3) else Double.MaxValue
-        def show(d: Double) = if (d == Double.MaxValue) "fail" else f"$d%.1f"
+        def show(d: Double) = if (d == Double.MaxValue) "fail" else num(d, 1)
         diag(name) = diag.get(name).map(_ + ";").getOrElse("") +
           (if (dt3 == Double.MaxValue) s"pass1=${show(dt1)},pass2=${show(dt2)}"
            else s"pass1=${show(dt1)},pass2=${show(dt2)},pass3=${show(dt3)}")
@@ -229,49 +281,14 @@ object Bench {
         try src.getLines().next().split(" ").take(2).mkString(",")
         finally src.close()
       } catch { case _: Throwable => "?" }
-      f"""{"wall_s":$wallS%.1f,"proc_cpu_s":$procS%.1f,"host_steal_s":$stealS%.1f,"host_iowait_s":$ioS%.1f,"other_proc_cpu_s":$otherS%.1f,"loadavg_end":"$load"}"""
+      s"""{"wall_s":${num(wallS, 1)},"proc_cpu_s":${num(procS, 1)},"host_steal_s":${num(stealS, 1)},"host_iowait_s":${num(ioS, 1)},"other_proc_cpu_s":${num(otherS, 1)},"loadavg_end":"$load"}"""
     }
-    // 2-decimal seconds (r15 verdict item 2): the raw Double.toString
-    // rendering inflated the full line to ~8 KB, far past the driver's
-    // 2000-char stdout-tail capture; 10 ms resolution is below the
-    // host-noise floor anyway, and the same full line also lands in the
-    // diag sidecar (bench_diag.jsonl) for complete per-query archival.
-    val qs = retried.map { case (k, v) => f""""$k":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"$k\":\"${escape(v)}\"" }
-      .mkString("{", ",", "}")
-    val diagJson = diag.map { case (k, v) => s"\"$k\":\"${escape(v)}\"" }
-      .mkString("{", ",", "}")
-    val total = if (retried.nonEmpty) retried.values.sum else 0.0
-    val fullLine = f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"errors":$errJson,"env":$envJson,"contended":$diagJson,"sf":"$sfDir"}"""
+    val (fullLine, compactLine) =
+      contractLines(retried.toSeq, errors, envJson, diag, sfDir)
     println(fullLine)
     diagLine(fullLine)
     diagOut.foreach(_.close())
-    // The full line above is still several KB at 203 queries — beyond
-    // the driver's 2 000-char stdout tail capture (measured: the r15
-    // BENCH artifact's tail field is exactly 2000 chars). Repeat the
-    // contract shape as a compact LAST line: same keys, but "queries"
-    // holds only the slowest entries that fit the budget (they're the
-    // ones a grader reads first; the full map is one line up for anyone
-    // with the whole log, and in the diag sidecar). Budget 1720 (was
-    // 1500): the tail capture holds 2000 chars and the line's fixed
-    // wrapper + sbt's trailing "[success] Total time: ..." line leave
-    // ~1800 usable — 1720 keeps a safety margin while widening the
-    // driver-visible window by ~10 rows.
-    val slowest = retried.toSeq.sortBy(-_._2)
-    val compactQs = {
-      val sb = new StringBuilder
-      var used = 0
-      for ((k, v) <- slowest) {
-        val piece = f""""$k":$v%.2f"""
-        if (used + piece.length < 1720) {
-          if (sb.nonEmpty) sb.append(",")
-          sb.append(piece); used += piece.length
-        }
-      }
-      "{" + sb.result() + "}"
-    }
-    println(f"""{"metric":"total","value":$total%.1f,"unit":"sec","n":${retried.size},"n_errors":${errors.size},"queries":$compactQs,"sf":"$sfDir"}""")
+    println(compactLine)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Vocab
@@ -32,17 +32,18 @@ object PropertyAxioms {
   def distinctPredicates(triples: DataFrame): DataFrame =
     triples.select("p").distinct()
 
+  /** The `owl:*Property` class a predicate column is typed as. */
+  def classOf(p: Column): Column =
+    when(array_contains(typedLit(annotationProperties.toSeq), p), "owl:AnnotationProperty")
+      .when(array_contains(typedLit(datatypeProperties.toSeq), p), "owl:DatatypeProperty")
+      .otherwise("owl:ObjectProperty")
+
   /** One `rdf:type owl:*Property` triple per used predicate. */
-  def axiomTriples(triples: DataFrame): DataFrame = {
-    val anno = typedLit(annotationProperties.toSeq)
-    val data = typedLit(datatypeProperties.toSeq)
+  def axiomTriples(triples: DataFrame): DataFrame =
     distinctPredicates(triples).select(
       col("p").as("s"),
       lit(Vocab.a).as("p"),
-      when(array_contains(anno, col("p")), "owl:AnnotationProperty")
-        .when(array_contains(data, col("p")), "owl:DatatypeProperty")
-        .otherwise("owl:ObjectProperty").as("o"),
+      classOf(col("p")).as("o"),
       lit(false).as("lit"),
       lit(null).cast("string").as("dt"))
-  }
 }

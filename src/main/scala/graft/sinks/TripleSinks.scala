@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CurieMap, NT}
@@ -17,6 +17,8 @@ import graft.core.{CurieMap, NT}
   */
 object TripleSinks {
 
+  private val key = Seq("s", "p", "o", "lit", "dt")
+
   /** Project a (s,p,o,lit,dt) triple DataFrame to canonical NT lines. */
   def toNtLines(triples: DataFrame, cm: CurieMap = CurieMap.default): DataFrame = {
     val oTerm = when(col("lit"), col("o")).otherwise(cm.expandCol(col("o")))
@@ -28,12 +30,18 @@ object TripleSinks {
     * keep the natural partitioning — the right call at scale). */
   def writeNt(triples: DataFrame, path: String,
               cm: CurieMap = CurieMap.default,
-              numFiles: Option[Int] = None): Unit = {
-    val lines = toNtLines(
-      triples.dropDuplicates("s", "p", "o", "lit", "dt"), cm)
-    val out = numFiles.map(lines.coalesce).getOrElse(lines)
-    out.write.mode(SaveMode.Overwrite).text(path)
-  }
+              numFiles: Option[Int] = None): Unit =
+    writeDistinctNt(triples.dropDuplicates(key), path, cm, numFiles)
+
+  /** [[writeNt]] over a relation that is already set-distinct on
+    * (s,p,o,lit,dt): a map-only projection, no dedup shuffle. */
+  def writeDistinctNt(triples: DataFrame, path: String, cm: CurieMap,
+                      numFiles: Option[Int] = None): Unit =
+    writeLines(toNtLines(triples, cm), path, numFiles)
+
+  private def writeLines(lines: DataFrame, path: String, numFiles: Option[Int]): Unit =
+    numFiles.map(lines.coalesce).getOrElse(lines)
+      .write.mode(SaveMode.Overwrite).text(path)
 
   /** NT partitioned by subject namespace prefix (the "partition by
     * source/taxon" posture, SURVEY §7): downstream consumers prune whole
@@ -41,7 +49,7 @@ object TripleSinks {
     * and per-prefix files parallelize the downstream sort-unify step. */
   def writeNtPartitioned(triples: DataFrame, path: String,
                          cm: CurieMap = CurieMap.default): Unit = {
-    val deduped = triples.dropDuplicates("s", "p", "o", "lit", "dt")
+    val deduped = triples.dropDuplicates(key)
     val oTerm = when(col("lit"), col("o")).otherwise(cm.expandCol(col("o")))
     val lines = deduped.select(
       NT.lineCol(cm.expandCol(col("s")), cm.expandCol(col("p")),
@@ -53,7 +61,7 @@ object TripleSinks {
 
   /** NQ projection: every triple tagged with `graphCol` (a CURIE/IRI
     * column — typically the ingest's named graph). */
-  def toNqLines(triples: DataFrame, graphCol: org.apache.spark.sql.Column,
+  def toNqLines(triples: DataFrame, graphCol: Column,
                 cm: CurieMap = CurieMap.default): DataFrame = {
     val oTerm = when(col("lit"), col("o")).otherwise(cm.expandCol(col("o")))
     triples.select(NT.quadLineCol(cm.expandCol(col("s")), cm.expandCol(col("p")),
@@ -62,32 +70,47 @@ object TripleSinks {
 
   /** Write deduplicated N-Quads (the reference's `nquads` format,
     * Source.py:192-198) — same map-only posture as [[writeNt]]. */
-  def writeNq(triples: DataFrame, graphCol: org.apache.spark.sql.Column,
+  def writeNq(triples: DataFrame, graphCol: Column,
               path: String, cm: CurieMap = CurieMap.default,
-              numFiles: Option[Int] = None): Unit = {
-    val lines = toNqLines(
-      triples.dropDuplicates("s", "p", "o", "lit", "dt"), graphCol, cm)
-    val out = numFiles.map(lines.coalesce).getOrElse(lines)
-    out.write.mode(SaveMode.Overwrite).text(path)
-  }
+              numFiles: Option[Int] = None): Unit =
+    writeDistinctNq(triples.dropDuplicates(key), graphCol, path, cm, numFiles)
+
+  /** [[writeNq]] over an already set-distinct relation. */
+  def writeDistinctNq(triples: DataFrame, graphCol: Column, path: String,
+                      cm: CurieMap, numFiles: Option[Int] = None): Unit =
+    writeLines(toNqLines(triples, graphCol, cm), path, numFiles)
+
+  /** The CURIE prefix a term binds: the text before its first `:`, or
+    * null for nulls, blank nodes and colon-free terms. */
+  private def prefixCol(c: Column): Column =
+    when(c.isNotNull && !c.startsWith("_") && c.contains(":"),
+      substring_index(c, ":", 1))
+
+  /** Driver-side twin of the per-term prefix rule, for triples built on
+    * the driver (same answer as the column expression). */
+  def prefixOf(term: String): Option[String] =
+    Option(term).filter(t => !t.startsWith("_") && t.contains(":"))
+      .map(t => t.substring(0, t.indexOf(':')))
+
+  /** The prefixes one triple row references: subject, predicate,
+    * resource object and datatype (null where a term binds none). */
+  def termPrefixes: Seq[Column] = Seq(prefixCol(col("s")), prefixCol(col("p")),
+    when(!col("lit"), prefixCol(col("o"))), prefixCol(col("dt")))
+
+  /** The CURIE map's bindings for the used prefixes, sorted by prefix. */
+  def bindPrefixes(used: Set[String], cm: CurieMap): Seq[(String, String)] =
+    // xsd datatypes surface even when only typed literals use them
+    cm.prefixes.toSeq.filter { case (p, _) => used(p) }.sortBy(_._1)
 
   /** Prefixes actually referenced by the triple relation (subject,
     * predicate, resource objects, datatypes) ∩ the CURIE map — the
     * reference binds only used namespaces the same way
     * (RDFGraph.py:199-205). One cheap distinct over prefix substrings;
     * the collect is bounded by the size of the prefix map. */
-  def usedPrefixes(triples: DataFrame, cm: CurieMap): Seq[(String, String)] = {
-    val pfx = (c: org.apache.spark.sql.Column) =>
-      when(c.isNotNull && !c.startsWith("_") && c.contains(":"),
-        substring_index(c, ":", 1))
-    val used = triples.select(explode(array(
-        pfx(col("s")), pfx(col("p")),
-        when(!col("lit"), pfx(col("o"))), pfx(col("dt")))).as("pfx"))
+  def usedPrefixes(triples: DataFrame, cm: CurieMap): Seq[(String, String)] =
+    bindPrefixes(triples.select(explode(array(termPrefixes: _*)).as("pfx"))
       .filter(col("pfx").isNotNull)
-      .distinct().collect().map(_.getString(0)).toSet
-    // xsd datatypes surface even when only typed literals use them
-    cm.prefixes.toSeq.filter { case (p, _) => used(p) }.sortBy(_._1)
-  }
+      .distinct().collect().map(_.getString(0)).toSet, cm)
 
   /** Best-effort Turtle: repartition by subject so each subject's triples
     * land in one partition, sort within partitions, assemble blocks with
@@ -95,14 +118,19 @@ object TripleSinks {
     * header binds only namespaces the graph actually uses, mirroring the
     * reference (RDFGraph.py:199-205). */
   def writeTurtle(triples: DataFrame, path: String,
-                  cm: CurieMap = CurieMap.default): Unit = {
+                  cm: CurieMap = CurieMap.default): Unit =
+    writeDistinctTurtle(triples.dropDuplicates(key), usedPrefixes(triples, cm), path)
+
+  /** [[writeTurtle]] over an already set-distinct (s,p,o,lit,dt)
+    * relation, with the header binding `prefixes` as given. */
+  def writeDistinctTurtle(triples: DataFrame, prefixes: Seq[(String, String)],
+                          path: String): Unit = {
     import triples.sparkSession.implicits._
     val spark = triples.sparkSession
-    val header = usedPrefixes(triples, cm)
+    val header = prefixes
       .map { case (p, ns) => s"@prefix $p: <$ns> ." }.mkString("\n")
     val body: Dataset[String] = triples
-      .select("s", "p", "o", "lit", "dt")
-      .dropDuplicates()
+      .select(key.map(col): _*)
       .repartition(col("s"))
       .sortWithinPartitions("s", "p", "o")
       .mapPartitions { rows =>
@@ -145,7 +173,13 @@ object TripleSinks {
     * declared. Predicates must be CURIEs from the map (true for all
     * engine emitters); literal datatypes expand to full IRIs. */
   def writeRdfXml(triples: DataFrame, path: String,
-                  cm: CurieMap = CurieMap.default): Unit = {
+                  cm: CurieMap = CurieMap.default): Unit =
+    writeDistinctRdfXml(triples.dropDuplicates(key), usedPrefixes(triples, cm), path, cm)
+
+  /** [[writeRdfXml]] over an already set-distinct (s,p,o,lit,dt)
+    * relation, declaring `prefixes` (plus `rdf`) as given. */
+  def writeDistinctRdfXml(triples: DataFrame, prefixes: Seq[(String, String)],
+                          path: String, cm: CurieMap): Unit = {
     import triples.sparkSession.implicits._
     val spark = triples.sparkSession
     val cmB = cm
@@ -154,14 +188,13 @@ object TripleSinks {
         .replace("\"", "&quot;")
     def xmlTextEscape(v: String): String =
       v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    val nsDecls = (("rdf" -> cm.prefixes("rdf")) +: usedPrefixes(triples, cm))
+    val nsDecls = (("rdf" -> cm.prefixes("rdf")) +: prefixes)
       .distinct
       .map { case (p, ns) => s"""    xmlns:$p="${xmlAttrEscape(ns)}"""" }
       .mkString("\n")
     val header = s"""<?xml version="1.0" encoding="UTF-8"?>\n<rdf:RDF\n$nsDecls>"""
     val body: Dataset[String] = triples
-      .select("s", "p", "o", "lit", "dt")
-      .dropDuplicates()
+      .select(key.map(col): _*)
       .repartition(col("s"))
       .sortWithinPartitions("s", "p", "o")
       .mapPartitions { rows =>
