@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.PersistedIndex
+
 /** BM25 index-tier throughput at the 100×-mutated documents fixture
   * (the t24/ProfRelease construction: 500k unique docs at sf0.1) —
   * evidence for the round-14 claim that the PERSISTED inverted index
@@ -155,8 +157,8 @@ object ProfBm25 {
     }
     qsMix.unpersist()
 
-    Seq("bm25_100x", "bm25_100x_dl", "bm25_100x_stats",
-        "bm25_100x_tombstones")
+    ("bm25_100x" +: Seq("dl", "stats", PersistedIndex.Tombstones)
+        .map(PersistedIndex.sidecar("bm25_100x", _)))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     spark.stop()
   }

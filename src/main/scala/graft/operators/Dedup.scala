@@ -473,20 +473,25 @@ object Dedup {
     * signature pass ONCE at index-build time; every subsequent batch
     * ([[minhashIncremental]]) joins the bucketed layout with no
     * recompute and no corpus-side shuffle (the index side is already
-    * co-located on the join key). */
+    * co-located on the join key). A rebuild resets the streaming
+    * ingest's `_batches` ledger and `_verdicts`
+    * ([[graft.engine.PersistedIndex.build]]), so a stream restarted at
+    * the same checkpoint applies its batch 0 against the new index. */
   def writeMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
                         table: String, path: String, numPerm: Int = 32,
                         bands: Int = 8, shingleN: Int = 3,
                         family: String = "xxhash64",
                         buckets: Int = 8): Unit = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    val sigs = minhashSignatures(docs, idCol, textCol, numPerm, shingleN,
-      family)
-    val sigArr = array((0 until numPerm).map(i => col(s"h$i")): _*)
-    graft.engine.Bucketing.writeBucketed(
-      bandRel(sigs.select(col("id"), sigArr.as("sig")), numPerm, bands,
-        family),
-      table, path, Seq("bh"), buckets)
+    graft.engine.PersistedIndex.build(docs.sparkSession, table) {
+      val sigs = minhashSignatures(docs, idCol, textCol, numPerm, shingleN,
+        family)
+      val sigArr = array((0 until numPerm).map(i => col(s"h$i")): _*)
+      graft.engine.Bucketing.writeBucketed(
+        bandRel(sigs.select(col("id"), sigArr.as("sig")), numPerm, bands,
+          family),
+        table, path, Seq("bh"), buckets)
+    }
   }
 
   /** Append a new document batch's band-bucket rows to a persisted

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+
+import graft.engine.{Bucketing, PersistedIndex}
 
 /** Lexical and hybrid retrieval over the `documents` corpus — the
   * query-side tools a training-data pipeline uses for decontamination
@@ -136,23 +139,29 @@ object Retrieval {
   def writeBm25Index(docs: DataFrame, idCol: String, textCol: String,
                      table: String, path: String, buckets: Int = 8): Unit = {
     val spark = docs.sparkSession
-    Similarity.dropIndexSidecars(spark, table)
-    val postings = bm25Postings(docs, idCol, textCol)
-    try {
-      // the bucketed write is the first action — it computes the
-      // postings once and fills the cache for the sidecar derivations
-      graft.engine.Bucketing.writeBucketed(
-        postings, table, path, Seq("term"), buckets)
-      postings.groupBy("doc").agg(max(col("dl")).as("dl"))
-        .write.mode("overwrite").format("parquet")
-        .option("path", s"${path}_dl").saveAsTable(s"${table}_dl")
-      // stats derive from the just-written (narrow) _dl sidecar — the
-      // same helper the append/delete paths use, so the invariant
-      // "stats ≡ aggregate of _dl minus tombstones" holds by
-      // construction on every path
-      writeBm25Stats(spark, table, path)
-    } finally { postings.unpersist(false); () }
+    PersistedIndex.build(spark, table) {
+      val postings = bm25Postings(docs, idCol, textCol)
+      try {
+        // the bucketed write is the first action — it computes the
+        // postings once and fills the cache for the sidecar derivations
+        Bucketing.writeBucketed(postings, table, path, Seq("term"), buckets)
+        PersistedIndex.writeSidecar(docLengths(postings), table, path, Dl)
+        // stats derive from the just-written (narrow) _dl sidecar — the
+        // same helper the append/delete paths use, so the invariant
+        // "stats ≡ aggregate of _dl minus tombstones" holds by
+        // construction on every path
+        writeBm25Stats(spark, table, path)
+      } finally { postings.unpersist(false); () }
+    }
   }
+
+  /** The `_dl` sidecar suffix: (doc, dl) rows, id-keyed, so compaction
+    * applies tombstones to it alongside the postings. */
+  private val Dl = "dl"
+
+  /** (doc, dl) of a posting relation. */
+  private def docLengths(postings: DataFrame): DataFrame =
+    postings.groupBy("doc").agg(max(col("dl")).as("dl"))
 
   /** The (term, doc, tf, dl) posting relation of a document batch in
     * ONE exchange: dl = Σtf is, by definition, the document's total
@@ -183,15 +192,13 @@ object Retrieval {
     * aggregate, exact regardless of partial-agg order (integer-valued
     * dl). */
   private def writeBm25Stats(spark: SparkSession, table: String,
-                             path: String): Unit = {
-    val dl0 = spark.table(s"${table}_dl")
-    val dl = bm25Tombstones(spark, table)
-      .fold(dl0)(t => dl0.join(broadcast(t), Seq("doc"), "left_anti"))
-    dl.agg(count(lit(1)).cast("double").as("n_docs"),
-        avg(col("dl")).as("avgdl"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_stats").saveAsTable(s"${table}_stats")
-  }
+                             path: String): Unit =
+    PersistedIndex.writeSidecar(
+      PersistedIndex.withoutDeleted(spark, table,
+          PersistedIndex.readModel(spark, table, Dl))
+        .agg(count(lit(1)).cast("double").as("n_docs"),
+          avg(col("dl")).as("avgdl")),
+      table, path, "stats")
 
   /** The empty result an index whose every document has been deleted
     * returns: zero hits with [[bm25Rank]]'s exact output schema (qid
@@ -204,16 +211,6 @@ object Retrieval {
       .withColumn("score", lit(null).cast("double"))
       .withColumn("rank", lit(null).cast("integer"))
 
-  /** The index's pending tombstone set, if any (None when absent or
-    * empty — never-deleted indexes keep their exact plans). */
-  private def bm25Tombstones(spark: SparkSession,
-                             table: String): Option[DataFrame] =
-    if (!spark.catalog.tableExists(s"${table}_tombstones")) None
-    else {
-      val t = spark.table(s"${table}_tombstones")
-      if (t.isEmpty) None else Some(t)
-    }
-
   /** Mark documents deleted from a persisted BM25 index — the
     * decontamination RETRACTION (t37/s28's whole point is keeping
     * benchmark docs out of a training corpus; this removes ones that
@@ -223,20 +220,19 @@ object Retrieval {
     * and N/avgdl recompute here from `_dl` minus tombstones — a query
     * after the delete scores exactly as if the index had been built
     * without those docs ([[compactBm25Index]] then applies the rewrite
-    * physically). */
+    * physically).
+    *
+    * Two commits, not one: the tombstone append
+    * ([[graft.engine.PersistedIndex.delete]]), then the `_stats`
+    * rewrite. A crash between them leaves the docs deleted from the
+    * candidates and from df, but N/avgdl still counting them — and
+    * compaction does not re-derive the stats, so the stale row stays
+    * until the next append or delete rewrites it. ROADMAP item 4's
+    * failpoint spec is to pin this window. */
   def deleteFromBm25Index(spark: SparkSession, table: String,
                           ids: DataFrame, idCol: String = "doc"): Unit = {
-    val tomb = s"${table}_tombstones"
-    val rows = ids.select(col(idCol).as("doc")).distinct()
-    if (spark.catalog.tableExists(tomb))
-      rows.write.mode("append").format("parquet").saveAsTable(tomb)
-    else
-      rows.write.mode("overwrite").format("parquet")
-        .option("path",
-          s"${Similarity.indexBasePath(spark, table)}_tombstones")
-        .saveAsTable(tomb)
-    writeBm25Stats(spark, table,
-      Similarity.indexBasePath(spark, table))
+    PersistedIndex.delete(table, ids, idCol, "doc")
+    writeBm25Stats(spark, table, PersistedIndex.basePath(spark, table))
   }
 
   /** Compact a persisted BM25 index (the appends-decay-the-layout
@@ -246,24 +242,14 @@ object Retrieval {
     * swaps on each), then the tombstone set truncates — post-compaction
     * queries pay no anti-join. */
   def compactBm25Index(spark: SparkSession, table: String): Unit =
-    bm25Tombstones(spark, table) match {
-      case Some(t0) =>
-        val t = broadcast(t0)
-        graft.engine.Bucketing.compactBucketed(spark, table,
-          df => df.join(t, Seq("doc"), "left_anti"))
-        graft.engine.Bucketing.rewriteTable(spark, s"${table}_dl",
-          df => df.join(t, Seq("doc"), "left_anti"))
-        Similarity.truncateTombstones(spark, table)
-        // NO stats rewrite here (r16): every tombstone arrives via
-        // [[deleteFromBm25Index]], which already recomputed stats as
-        // aggregate(_dl minus tombstones); the physical rewrite above
-        // removes exactly those rows from _dl and truncates the
-        // tombstones, so aggregate(clean _dl) equals the stored stats
-        // by construction — the former re-derive was a redundant
-        // write/commit action on the t39 critical path (guide §1.2).
-      case None =>
-        graft.engine.Bucketing.compactBucketed(spark, table)
-    }
+    // NO stats rewrite here (r16): every tombstone arrives via
+    // [[deleteFromBm25Index]], which already recomputed stats as
+    // aggregate(_dl minus tombstones); the physical rewrite removes
+    // exactly those rows from _dl and truncates the tombstones, so
+    // aggregate(clean _dl) equals the stored stats by construction —
+    // the former re-derive was a redundant write/commit action on the
+    // t39 critical path (guide §1.2).
+    PersistedIndex.compact(spark, table, alongside = Seq(Dl))
 
   /** Append a new document batch to a persisted BM25 index (FAISS
     * add() semantics — ids are new, nothing re-tokenizes): the batch's
@@ -280,13 +266,9 @@ object Retrieval {
                       buckets: Int = 8): Unit = {
     val postings = bm25Postings(newDocs, idCol, textCol)
     try {
-      graft.engine.Bucketing.appendBucketed(
-        postings, table, Seq("term"), buckets)
-      postings.groupBy("doc").agg(max(col("dl")).as("dl"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${table}_dl")
-      writeBm25Stats(spark, table,
-        Similarity.indexBasePath(spark, table))
+      Bucketing.appendBucketed(postings, table, Seq("term"), buckets)
+      PersistedIndex.appendSidecar(docLengths(postings), table, Dl)
+      writeBm25Stats(spark, table, PersistedIndex.basePath(spark, table))
       spark.catalog.refreshTable(table)
     } finally { postings.unpersist(false); () }
   }
@@ -369,21 +351,22 @@ object Retrieval {
     require(terms.length <= 4096,
       s"probed term set must be driver-bounded, got ${terms.length}")
     val qidType = qtRows.headOption.map(_.schema("qid").dataType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
-    val qt = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(qtRows: _*),
-      new org.apache.spark.sql.types.StructType()
-        .add("qid", qidType)
-        .add("term", org.apache.spark.sql.types.StringType)))
+      .getOrElse(LongType)
+    // the driver-side relations below broadcast as LOCAL relations
+    def local(rows: Seq[Row], fields: (String, DataType)*): DataFrame =
+      broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(fields.map { case (n, t) => StructField(n, t) })))
+    def qidTerms(rows: Seq[Row]): DataFrame =
+      local(rows, "qid" -> qidType, "term" -> StringType)
+    val qt = qidTerms(qtRows.toSeq)
     val postings0 =
-      if (terms.isEmpty) graft.engine.Bucketing.readBucketed(spark, table)
+      if (terms.isEmpty) Bucketing.readBucketed(spark, table)
         .filter(lit(false))
-      else graft.engine.Bucketing.readBucketed(spark, table)
+      else Bucketing.readBucketed(spark, table)
         .filter(col("term").isin(terms.toIndexedSeq: _*))
     // pending deletes anti-join out BEFORE df is counted, so the idf of
     // a probed term self-corrects the moment a doc is tombstoned
-    val postings = bm25Tombstones(spark, table)
-      .fold(postings0)(t => postings0.join(broadcast(t), Seq("doc"), "left_anti"))
+    val postings = PersistedIndex.withoutDeleted(spark, table, postings0)
     // ONE driver action yields the (N, avgdl) stats scalars AND the
     // per-term df / score-bound inputs (max tf, min dl over the same
     // pruned scan): the `_stats` row rides the aggregate as a
@@ -394,7 +377,7 @@ object Retrieval {
     // they are never stale (appends/deletes reflect immediately; the
     // r14 verdict's build-time sidecar would go stale-high under
     // deletes instead).
-    val combined = spark.table(s"${table}_stats")
+    val combined = PersistedIndex.readModel(spark, table, "stats")
       .select(lit(null).cast("string").as("term"),
         lit(0.0).as("df"), lit(0.0).as("maxtf"), lit(0.0).as("mindl"),
         col("n_docs"), col("avgdl"))
@@ -416,18 +399,17 @@ object Retrieval {
     // tombstoned corpus writes a NULL avgdl)
     val avgdl = statsRow.getAs[Double]("avgdl")
     val termStats = combined.filter(r => !r.isNullAt(0))
-    val dfq = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(termStats.map(r =>
-        org.apache.spark.sql.Row(r.get(0), r.getDouble(1))): _*),
-      new org.apache.spark.sql.types.StructType()
-        .add("term", org.apache.spark.sql.types.StringType)
-        .add("df", org.apache.spark.sql.types.DoubleType)))
-    def rank(qtX: DataFrame): DataFrame =
-      bm25Rank(postings.filter(pred)
+    val dfq = local(termStats.toSeq.map(r => Row(r.get(0), r.getDouble(1))),
+      "term" -> StringType, "df" -> DoubleType)
+    // (qid, doc, s) partial scores of the `qtX` query terms
+    def scored(qtX: DataFrame): DataFrame =
+      postings.filter(pred)
         .join(dfq, "term").join(qtX, "term")
         .select(col("qid"), col("doc"),
           bm25Score(nDocs, avgdl, k1, b).as("s"))
-        .groupBy("qid", "doc").agg(sum(col("s")).as("score")), k)
+    def rank(qtX: DataFrame): DataFrame =
+      bm25Rank(scored(qtX).groupBy("qid", "doc")
+        .agg(sum(col("s")).as("score")), k)
     if (matchAll) {
       // conjunctive (Lucene AND) semantics: only docs containing
       // EVERY distinct query term are candidates; scores are the same
@@ -439,27 +421,15 @@ object Retrieval {
       // empty posting list yields naturally.
       val dfOfAll = termStats.map(r => r.get(0) -> r.getDouble(1)).toMap
       val byQ = qtRows.groupBy(_.get(0))
-      val qtRarest = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(byQ.toSeq.map { case (q, rs) =>
-          org.apache.spark.sql.Row(q, rs.map(_.get(1))
-            .minBy(t => dfOfAll.getOrElse(t, 0.0)))
-        }: _*),
-        new org.apache.spark.sql.types.StructType()
-          .add("qid", qidType)
-          .add("term", org.apache.spark.sql.types.StringType)))
+      val qtRarest = qidTerms(byQ.toSeq.map { case (q, rs) =>
+        Row(q, rs.map(_.get(1)).minBy(t => dfOfAll.getOrElse(t, 0.0)))
+      })
       val cand = postings.join(qtRarest, "term")
         .select(col("qid"), col("doc"))
-      val needDf = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(byQ.toSeq.map { case (q, rs) =>
-          org.apache.spark.sql.Row(q, rs.length.toLong)
-        }: _*),
-        new org.apache.spark.sql.types.StructType()
-          .add("qid", qidType)
-          .add("need", org.apache.spark.sql.types.LongType)))
-      val agg = postings.filter(pred)
-        .join(dfq, "term").join(qt, "term")
-        .select(col("qid"), col("doc"),
-          bm25Score(nDocs, avgdl, k1, b).as("s"))
+      val needDf = local(byQ.toSeq.map { case (q, rs) =>
+        Row(q, rs.length.toLong)
+      }, "qid" -> qidType, "need" -> LongType)
+      val agg = scored(qt)
         .join(cand, Seq("qid", "doc"), "left_semi")
         .groupBy("qid", "doc")
         .agg(sum(col("s")).as("score"), count(lit(1)).as("nt"))
@@ -503,17 +473,9 @@ object Retrieval {
     // — cheap by construction (essential ⇒ short lists). The k-th best
     // partial is a valid lower bound θ of the k-th best FINAL score
     // (those k docs can only gain from their non-essential terms).
-    val qtE = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(prunable0.flatMap(q =>
-        byQid(q).filterNot(neOf(q).contains)
-          .map(t => org.apache.spark.sql.Row(q, t))): _*),
-      new org.apache.spark.sql.types.StructType()
-        .add("qid", qidType)
-        .add("term", org.apache.spark.sql.types.StringType)))
-    val aggE = postings.filter(pred)
-      .join(dfq, "term").join(qtE, "term")
-      .select(col("qid"), col("doc"),
-        bm25Score(nDocs, avgdl, k1, b).as("s"))
+    val qtE = qidTerms(prunable0.flatMap(q =>
+      byQid(q).filterNot(neOf(q).contains).map(t => Row(q, t))))
+    val aggE = scored(qtE)
       .groupBy("qid", "doc").agg(sum(col("s")).as("pscore"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wE = Window.partitionBy("qid")
@@ -552,11 +514,7 @@ object Retrieval {
       .groupBy("qid", "doc").agg(sum(col("s")).as("score"))
     val agg =
       if (fallback.isEmpty) aggP
-      else aggP.unionByName(postings.filter(pred)
-        .join(dfq, "term")
-        .join(qt.filter(col("qid").isin(fallback: _*)), "term")
-        .select(col("qid"), col("doc"),
-          bm25Score(nDocs, avgdl, k1, b).as("s"))
+      else aggP.unionByName(scored(qt.filter(col("qid").isin(fallback: _*)))
         .groupBy("qid", "doc").agg(sum(col("s")).as("score")))
     (finalized(bm25Rank(agg, k), aggE), pruned)
   }
@@ -610,11 +568,7 @@ object Retrieval {
     * [[compactBm25Index]] pays (ProfBm25). Returns the action taken
     * so a scheduler can log the decision. */
   def maintainBm25Index(spark: SparkSession, table: String): String =
-    if (Similarity.maxFilesPerBucket(spark, table) > 1 ||
-        bm25Tombstones(spark, table).nonEmpty) {
-      compactBm25Index(spark, table)
-      "compacted (layout decayed or deletes pending)"
-    } else "healthy (minimal layout, no pending deletes)"
+    PersistedIndex.maintain(spark, table, alongside = Seq(Dl))
 
   /** Reciprocal-rank fusion of ranked runs (Cormack et al. 2009):
     * score(q, d) = Σ over the runs containing d of 1/(k0 + rank). Each

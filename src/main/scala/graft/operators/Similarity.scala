@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.engine.{Bucketing, PersistedIndex}
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Vector math is `zip_with`/`aggregate` over the array in double
@@ -64,9 +66,15 @@ object Similarity {
       .withColumn("qn", vec_norm(col("qv")))
     val c = widen(corpus.select(col(idCol).as("nid"), numVec(corpus, vecCol).as("nv")))
       .withColumn("nn", vec_norm(col("nv")))
-    val sims = c.join(broadcast(q), col("nid") =!= col("qid"))
+    topKPerQuery(c.join(broadcast(q), col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim"))
+        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim")), k)
+  }
+
+  /** The per-query top-k tail every similarity search shares: rank each
+    * query's (qid, nid, sim) candidates by sim descending, ties toward
+    * the smaller nid, keep `k`, round sim to 6 dp. */
+  private def topKPerQuery(sims: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
     sims.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -131,13 +139,9 @@ object Similarity {
     val q = queries.select(col(idCol).as("qid"),
         toDoubleVec(col(vecCol)).as("qv"))
       .withColumn("qn", vec_norm(col("qv")))
-    val sims = c.join(broadcast(q), col("nid") =!= col("qid"))
+    topKPerQuery(c.join(broadcast(q), col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim")), k)
   }
 
   /** Persist an SQ8 index: ONE BYTE per coordinate — an id-bucketed
@@ -153,29 +157,37 @@ object Similarity {
     import graft.functions.VecExpressions.vec_sq8_codes
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropIndexSidecars(spark, table)
-    val rows = sq8RangeRows(corpus, vecCol)
-    // fail fast at BUILD time if the corpus disagrees with `dim`
-    // (ADVICE r13: vectors longer than dim used to write a sidecar
-    // with > dim range rows, and every later sq8TopKIndexed/append
-    // then failed its rows.length == dim check against an index the
-    // build had declared valid — the build and query paths must agree
-    // on dimensionality at the moment the artifact is written)
+    PersistedIndex.build(spark, table, Some("ranges")) {
+      val rows = sq8RangeRows(corpus, vecCol)
+      // fail fast at BUILD time if the corpus disagrees with `dim`
+      // (ADVICE r13: vectors longer than dim used to write a sidecar
+      // with > dim range rows, and every later sq8TopKIndexed/append
+      // then failed its rows.length == dim check against an index the
+      // build had declared valid — the build and query paths must agree
+      // on dimensionality at the moment the artifact is written)
+      require(rows.length == dim,
+        s"corpus has coordinates at ${rows.length} positions but the " +
+          s"index is declared dim=$dim — writeSq8Index refuses to " +
+          "persist a sidecar its own query path would reject")
+      val (mins, deltas) = rangeArrays(rows, dim)
+      PersistedIndex.writeSidecar(rows.toSeq.toDF("i", "lo", "delta"),
+        table, path, "ranges")
+      Bucketing.writeBucketed(
+        widen(corpus.select(col(idCol).as("nid"),
+          vec_sq8_codes(numVec(corpus, vecCol), mins, deltas).as("code"))),
+        table, path, Seq("nid"), buckets)
+    }
+  }
+
+  /** The persisted `_ranges` model of an SQ8 index (generation-checked
+    * against the codes), decoded to per-dimension (mins, deltas). */
+  private def storedRanges(spark: SparkSession, table: String,
+                           dim: Int): (Array[Double], Array[Double]) = {
+    val rows = PersistedIndex.readModel(spark, table, "ranges")
+      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
     require(rows.length == dim,
-      s"corpus has coordinates at ${rows.length} positions but the " +
-        s"index is declared dim=$dim — writeSq8Index refuses to " +
-        "persist a sidecar its own query path would reject")
-    val (mins, deltas) = rangeArrays(rows, dim)
-    rows.toSeq.toDF("i", "lo", "delta")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_ranges")
-      .saveAsTable(s"${table}_ranges")
-    graft.engine.Bucketing.writeBucketed(
-      widen(corpus.select(col(idCol).as("nid"),
-        vec_sq8_codes(numVec(corpus, vecCol), mins, deltas).as("code"))),
-      table, path, Seq("nid"), buckets)
-    stampBuildGen(spark, table, s"${table}_ranges")
-    spark.catalog.refreshTable(table)
+      s"index $table stores ${rows.length} dimensions, got dim=$dim")
+    rangeArrays(rows, dim)
   }
 
   /** Append a new vector batch to a persisted SQ8 index: the batch
@@ -186,16 +198,8 @@ object Similarity {
                      idCol: String, vecCol: String, table: String,
                      dim: Int, buckets: Int = 8): Unit = {
     import graft.functions.VecExpressions.vec_sq8_codes
-    requireGenConsistent(spark, table, s"${table}_ranges")
-    val rows = spark.table(s"${table}_ranges")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    require(rows.length == dim,
-      s"index $table stores ${rows.length} dimensions, got dim=$dim")
-    val m = rows.map(t => t._1 -> t).toMap
-    val mins = Array.tabulate(dim)(i => m.get(i).map(_._2).getOrElse(0.0))
-    val deltas = Array.tabulate(dim)(i => m.get(i).map(_._3).getOrElse(0.0))
-    graft.engine.Bucketing.appendBucketed(
+    val (mins, deltas) = storedRanges(spark, table, dim)
+    Bucketing.appendBucketed(
       newVectors.select(col(idCol).as("nid"),
         vec_sq8_codes(numVec(newVectors, vecCol), mins, deltas).as("code")),
       table, Seq("nid"), buckets)
@@ -211,9 +215,9 @@ object Similarity {
     * maintenance family: raw IVF and the two code shapes rebalance
     * cells ([[rebalanceIvfIndex]]/[[rebalanceIvfadcIndex]]/
     * [[rebalanceIvfadcResidualIndex]]), SQ8 retrains ranges — all
-    * through the same staged two-swap discipline: the `_ranges`
-    * sidecar swaps first (new rows + [[GenProp]] stamp, one catalog
-    * op), the codes table commits with the same stamp; a crash
+    * through the same stamped staged two-swap
+    * ([[graft.engine.PersistedIndex.retrain]]): the `_ranges` sidecar
+    * swaps first, the codes table commits with the same stamp; a crash
     * between the swaps fails LOUD at the next query/append. Pending
     * tombstones are excluded from the retrain and applied physically.
     * End state ≡ a fresh [[writeSq8Index]] over the union (spec-
@@ -222,25 +226,17 @@ object Similarity {
                       idCol: String, vecCol: String, dim: Int): Unit = {
     import graft.functions.VecExpressions.vec_sq8_codes
     import spark.implicits._
-    val gen = newGen()
-    val hadTombstones = pendingTombstones(spark, table).nonEmpty
-    val rawClean0 = raw.select(col(idCol).as("nid"), col(vecCol).as("rv0"))
-    val rawClean = pendingTombstones(spark, table)
-      .fold(rawClean0)(t =>
-        rawClean0.join(broadcast(t), Seq("nid"), "left_anti"))
-    val rows = sq8RangeRows(rawClean, "rv0")
-    require(rows.length == dim,
-      s"raw store has coordinates at ${rows.length} positions but the " +
-        s"index is declared dim=$dim")
-    val (mins, deltas) = rangeArrays(rows, dim)
-    graft.engine.Bucketing.rewriteTable(spark, s"${table}_ranges",
-      _ => rows.toSeq.toDF("i", "lo", "delta"), Map(GenProp -> gen))
-    graft.engine.Bucketing.stageCompaction(spark, table,
-      _ => rawClean.select(col("nid"),
-        vec_sq8_codes(numVec(rawClean, "rv0"), mins, deltas).as("code")))
-    graft.engine.Bucketing.swapToStaged(spark, table,
-      Map(GenProp -> gen))
-    if (hadTombstones) truncateTombstones(spark, table)
+    PersistedIndex.retrain(spark, table, "ranges",
+        raw.select(col(idCol).as("nid"), col(vecCol).as("rv0"))) { clean =>
+      val rows = sq8RangeRows(clean, "rv0")
+      require(rows.length == dim,
+        s"raw store has coordinates at ${rows.length} positions but the " +
+          s"index is declared dim=$dim")
+      val (mins, deltas) = rangeArrays(rows, dim)
+      (rows.toSeq.toDF("i", "lo", "delta"),
+        _ => clean.select(col("nid"),
+          vec_sq8_codes(numVec(clean, "rv0"), mins, deltas).as("code")))
+    }
   }
 
   /** Query a persisted SQ8 index: decode the byte codes to
@@ -252,19 +248,11 @@ object Similarity {
                      queries: DataFrame, idCol: String, vecCol: String,
                      dim: Int, k: Int, pred: Column = lit(true)): DataFrame = {
     import graft.functions.VecExpressions.{vec_norm, vec_sq8_decode}
-    requireGenConsistent(spark, table, s"${table}_ranges")
-    val rows = spark.table(s"${table}_ranges")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    require(rows.length == dim,
-      s"index $table stores ${rows.length} dimensions, got dim=$dim")
-    val m = rows.map(t => t._1 -> t).toMap
-    val mins = Array.tabulate(dim)(i => m.get(i).map(_._2).getOrElse(0.0))
-    val deltas = Array.tabulate(dim)(i => m.get(i).map(_._3).getOrElse(0.0))
+    val (mins, deltas) = storedRanges(spark, table, dim)
     // `pred` (filtered search) lands on the byte-code scan BEFORE the
     // decode map pass, so a selective slice also skips its decodes
-    val c = withoutDeleted(spark, table,
-        graft.engine.Bucketing.readBucketed(spark, table).filter(pred))
+    val c = PersistedIndex.withoutDeleted(spark, table,
+        Bucketing.readBucketed(spark, table).filter(pred))
       .select(col("nid"), vec_sq8_decode(col("code"), mins, deltas).as("nv"))
       .withColumn("nn", vec_norm(col("nv")))
     sq8Search(c, queries, idCol, vecCol, k)
@@ -371,19 +359,6 @@ object Similarity {
       .orderBy(col("r"), col("cid")).limit(nlist)
       .drop("r")
 
-  /** IVF (inverted-file) ANN: assign every corpus vector to its nearest
-    * of `nlist` coarse centroids (one cell each), then search each query
-    * only in its `nprobe` nearest cells with exact cosine — the other
-    * classic ANN scale path next to [[lshTopK]]. Per-query work drops from
-    * |corpus| to ~(nprobe/nlist)·|corpus|; recall < 1 because a true
-    * neighbor assigned to an unprobed cell is missed.
-    *
-    * Scale shape: cell assignment is a pure map-side literal argmax
-    * (see [[cellAssignment]] — no shuffle, no ×nlist blow-up); the
-    * probe join shuffles the corpus once on cell id (or not at all
-    * against a persisted index, [[ivfTopKIndexed]]).
-    * Ties (equal cosine to two centroids) break toward the smaller
-    * centroid id on both engine and oracle. */
   /** Per-side similarity to every broadcast centroid — the probe
     * primitive of the IVF family (query sets; small by contract). */
   private def cellSims(side: DataFrame, id: String, vec: String,
@@ -530,34 +505,74 @@ object Similarity {
                           k: Int): DataFrame = {
     import graft.functions.VecExpressions.vec_dot
     val probes = localizeProbes(probes0)
-    val sims = pruneToProbedCells(assigned, probes.cells)
+    topKPerQuery(pruneToProbedCells(assigned, probes.cells)
       .join(broadcast(probes.df), "cell")
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim")), k)
   }
 
-  /** `refineIters` > 0 Lloyd-refines the coarse centroids with
+  /** IVF (inverted-file) ANN: assign every corpus vector to its nearest
+    * of `nlist` coarse centroids (one cell each), then search each query
+    * only in its `nprobe` nearest cells with exact cosine — the other
+    * classic ANN scale path next to [[lshTopK]]. Per-query work drops from
+    * |corpus| to ~(nprobe/nlist)·|corpus|; recall < 1 because a true
+    * neighbor assigned to an unprobed cell is missed.
+    *
+    * Scale shape: cell assignment is a pure map-side literal argmax
+    * (see [[cellAssignment]] — no shuffle, no ×nlist blow-up); the
+    * probe join shuffles the corpus once on cell id (or not at all
+    * against a persisted index, [[ivfTopKIndexed]]).
+    * Ties (equal cosine to two centroids) break toward the smaller
+    * centroid id on both engine and oracle.
+    *
+    * `refineIters` > 0 Lloyd-refines the coarse centroids with
     * [[kmeansRefine]] before assignment — the trained coarse quantizer
-    * FAISS pairs with its trained PQ; 0 keeps the md5-sampled seed. */
+    * FAISS pairs with its trained PQ; 0 keeps the md5-sampled seed;
+    * `balanceFactor` > 0 splits oversized cells
+    * ([[balancedIvfCentroids]]). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16,
               nprobe: Int = 4, refineIters: Int = 0,
               balanceFactor: Double = 0.0): DataFrame = {
-    import graft.functions.VecExpressions.vec_norm
-    val cents0 =
-      if (balanceFactor > 0)
-        balancedIvfCentroids(corpus, idCol, vecCol, nlist, balanceFactor,
-          refineIters = refineIters)
-      else ivfCentroidTable(corpus, idCol, vecCol, nlist, refineIters)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
+    val cents = normed(coarseCentroids(corpus, idCol, vecCol, nlist,
+      balanceFactor, refineIters))
     probeSearch(cellAssignment(corpus, idCol, vecCol, cents),
       probeCells(queries, idCol, vecCol, cents, nprobe), k)
   }
+
+  /** The coarse quantizer a build or in-session search trains:
+    * [[balancedIvfCentroids]] when `balanceFactor` > 0, else the
+    * md5-sampled seed ([[ivfCentroidTable]], Lloyd-refined for
+    * `refineIters` rounds). (cid, cv). */
+  private def coarseCentroids(corpus: DataFrame, idCol: String,
+                              vecCol: String, nlist: Int,
+                              balanceFactor: Double,
+                              refineIters: Int = 0): DataFrame =
+    if (balanceFactor > 0)
+      balancedIvfCentroids(corpus, idCol, vecCol, nlist, balanceFactor,
+        refineIters = refineIters)
+    else ivfCentroidTable(corpus, idCol, vecCol, nlist, refineIters)
+
+  /** A (cid, cv) centroid table with its norms `cn`, broadcast — the
+    * form every assignment and probe consumes. */
+  private def normed(cents: DataFrame): DataFrame = {
+    import graft.functions.VecExpressions.vec_norm
+    broadcast(cents.withColumn("cn", vec_norm(col("cv"))))
+  }
+
+  /** A persisted index's `_centroids` model (generation-checked against
+    * its rows), [[normed]]. */
+  private def storedCentroids(spark: SparkSession, table: String): DataFrame =
+    normed(PersistedIndex.readModel(spark, table, "centroids"))
+
+  /** Persist a (cid, cv) centroid table as the index's `_centroids`
+    * sidecar, coordinates widened to double. */
+  private def writeCentroids(cents: DataFrame, table: String,
+                             path: String): Unit =
+    PersistedIndex.writeSidecar(
+      cents.select(col("cid"), toDoubleVec(col("cv")).as("cv")),
+      table, path, "centroids")
 
   /** The coarse centroid table: the md5-sampled seed, Lloyd-refined
     * for `refineIters` rounds when requested. (cid, cv). */
@@ -584,27 +599,15 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     table: String, path: String, nlist: Int = 16,
                     buckets: Int = 8, refineIters: Int = 0,
-                    balanceFactor: Double = 0.0): Unit = {
-    import graft.functions.VecExpressions.vec_norm
-    val spark = corpus.sparkSession
-    dropIndexSidecars(spark, table)
-    val cents0 =
-      if (balanceFactor > 0)
-        balancedIvfCentroids(corpus, idCol, vecCol, nlist, balanceFactor,
-          refineIters = refineIters)
-      else ivfCentroidTable(corpus, idCol, vecCol, nlist, refineIters)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
-    graft.engine.Bucketing.writeBucketed(
-      cellAssignment(corpus, idCol, vecCol, cents).drop("csim"),
-      table, path, Seq("cell"), buckets)
-    cents0.select(col("cid"), toDoubleVec(col("cv")).as("cv"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_centroids")
-      .saveAsTable(s"${table}_centroids")
-    stampBuildGen(spark, table, s"${table}_centroids")
-    // saveAsTable leaves the session pointed at the written tables
-    spark.catalog.refreshTable(table)
-  }
+                    balanceFactor: Double = 0.0): Unit =
+    PersistedIndex.build(corpus.sparkSession, table, Some("centroids")) {
+      val cents0 = coarseCentroids(corpus, idCol, vecCol, nlist,
+        balanceFactor, refineIters)
+      Bucketing.writeBucketed(
+        cellAssignment(corpus, idCol, vecCol, normed(cents0)).drop("csim"),
+        table, path, Seq("cell"), buckets)
+      writeCentroids(cents0, table, path)
+    }
 
   /** Append a new vector batch to a persisted raw-vector IVF index —
     * FAISS add() on the coarse quantizer: the batch assigns to the
@@ -617,13 +620,8 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, newVectors: DataFrame,
                      idCol: String, vecCol: String, table: String,
                      buckets: Int = 8): Unit = {
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
-    graft.engine.Bucketing.appendBucketed(
-      cellAssignment(newVectors, idCol, vecCol, cents).drop("csim"),
+    Bucketing.appendBucketed(cellAssignment(newVectors, idCol, vecCol,
+        storedCentroids(spark, table)).drop("csim"),
       table, Seq("cell"), buckets)
     spark.catalog.refreshTable(table)
   }
@@ -635,19 +633,15 @@ object Similarity {
   def ivfTopKIndexed(spark: SparkSession, table: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      nprobe: Int = 4, pred: Column = lit(true)): DataFrame = {
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
+    val cents = storedCentroids(spark, table)
     // `pred` is the FILTERED-search predicate every production vector
     // service exposes (restrict candidates to an attribute slice —
     // here over the index table's columns, e.g. nid): it lands on the
     // index scan NEXT TO the probed-cell In filter, so bucket pruning
     // and the attribute pushdown compose in one FileSourceScan
     probeSearch(
-      withoutDeleted(spark, table,
-        graft.engine.Bucketing.readBucketed(spark, table).filter(pred)),
+      PersistedIndex.withoutDeleted(spark, table,
+        Bucketing.readBucketed(spark, table).filter(pred)),
       probeCells(queries, idCol, vecCol, cents, nprobe), k)
   }
 
@@ -671,9 +665,7 @@ object Similarity {
                  vecCol: String, dim: Int, k: Int, nlist: Int = 16,
                  nprobe: Int = 4, m: Int = 4, ks: Int = 16): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    val cents = broadcast(ivfCentroids(corpus, idCol, vecCol, nlist)
-      .withColumn("cn", vec_norm(col("cv"))))
+    val cents = normed(ivfCentroids(corpus, idCol, vecCol, nlist))
     val codebook = pqCodebook(corpus, idCol, vecCol, dim, m, ks)
     // cell rides the encode projection ([[withCellCol]] + carry) — the
     // former pqEncode ⋈ cellAssignment joined two map-side projections
@@ -700,31 +692,19 @@ object Similarity {
                        buckets: Int = 8, trainIters: Int = 0,
                        balanceFactor: Double = 0.0): Unit = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    val spark = corpus.sparkSession
-    dropIndexSidecars(spark, table)
-    val cents0 =
-      if (balanceFactor > 0)
-        balancedIvfCentroids(corpus, idCol, vecCol, nlist, balanceFactor)
-      else ivfCentroids(corpus, idCol, vecCol, nlist)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
-    val codebook =
-      if (trainIters > 0) pqCodebookTrained(corpus, idCol, vecCol, dim, m, ks, trainIters)
-      else pqCodebook(corpus, idCol, vecCol, dim, m, ks)
-    codebook.write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_codebook")
-      .saveAsTable(s"${table}_codebook")
-    cents0.select(col("cid"), toDoubleVec(col("cv")).as("cv"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_centroids")
-      .saveAsTable(s"${table}_centroids")
-    graft.engine.Bucketing.writeBucketed(
-      // cell rides the encode projection — no corpus-sized join back
-      pqEncode(withCellCol(corpus, idCol, vecCol, cents),
-        idCol, vecCol, codebook, dim, m, carry = Seq("cell")),
-      table, path, Seq("cell"), buckets)
-    stampBuildGen(spark, table, s"${table}_centroids")
-    spark.catalog.refreshTable(table)
+    PersistedIndex.build(corpus.sparkSession, table, Some("centroids")) {
+      val cents0 = coarseCentroids(corpus, idCol, vecCol, nlist,
+        balanceFactor)
+      val codebook = codebookFor(corpus, idCol, vecCol, dim, m, ks,
+        trainIters)
+      PersistedIndex.writeSidecar(codebook, table, path, "codebook")
+      writeCentroids(cents0, table, path)
+      Bucketing.writeBucketed(
+        // cell rides the encode projection — no corpus-sized join back
+        pqEncode(withCellCol(corpus, idCol, vecCol, normed(cents0)),
+          idCol, vecCol, codebook, dim, m, carry = Seq("cell")),
+        table, path, Seq("cell"), buckets)
+    }
   }
 
   /** Append a new vector batch to a persisted IVFADC index — the
@@ -738,17 +718,12 @@ object Similarity {
                         idCol: String, vecCol: String, table: String,
                         dim: Int, m: Int = 4, buckets: Int = 8): Unit = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
-    graft.engine.Bucketing.appendBucketed(
+    val cents = storedCentroids(spark, table)
+    Bucketing.appendBucketed(
       // cell rides the encode projection — no batch-sized join back
       pqEncode(withCellCol(newVectors, idCol, vecCol, cents),
-        idCol, vecCol, codebook, dim, m, carry = Seq("cell")),
+        idCol, vecCol, storedCodebook(spark, table), dim, m,
+        carry = Seq("cell")),
       table, Seq("cell"), buckets)
     spark.catalog.refreshTable(table)
   }
@@ -762,21 +737,16 @@ object Similarity {
                         queries: DataFrame, idCol: String, vecCol: String,
                         dim: Int, k: Int, nprobe: Int = 4,
                         m: Int = 4, pred: Column = lit(true)): DataFrame = {
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
+    val cents = storedCentroids(spark, table)
+    val codebook = storedCodebook(spark, table)
     // `pred` — filtered vector search on the SERVING shape (r13
     // verdict #2: the billion-vector tier serves from the code tables,
     // so the attribute slice must land here, not only on the 4×-larger
     // raw index): it pushes onto the codes scan next to the
     // probed-cell In, composing with bucket pruning in one
     // FileSourceScan (IndexPlanSpec pins both markers coexist)
-    val encoded = withoutDeleted(spark, table,
-      graft.engine.Bucketing.readBucketed(spark, table).filter(pred))
+    val encoded = PersistedIndex.withoutDeleted(spark, table,
+      Bucketing.readBucketed(spark, table).filter(pred))
     ivfadcSearch(encoded, queries, idCol, vecCol, codebook, cents,
       dim, m, k, nprobe)
   }
@@ -789,30 +759,16 @@ object Similarity {
                            codebook: DataFrame, cents: DataFrame,
                            dim: Int, m: Int, k: Int,
                            nprobe: Int): DataFrame = {
-    import graft.functions.VecExpressions.{vec_dot, vec_norm}
-    val sub = dim / m
     val probes = localizeProbes(
       probeCells(queries, idCol, vecCol, cents, nprobe)
         .select(col("qid"), col("cell")))
-    val tables = broadcast(queries
-      .select(col(idCol).as("qid"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qn", vec_norm(col("qv")))
-      .select(col("qid"), col("qn"),
-        posexplode(array((0 until m).map(i =>
-          slice(col("qv"), i * sub + 1, sub)): _*)).as(Seq("nsub", "qsv")))
-      .join(codebook.withColumnRenamed("sub", "nsub"), "nsub")
-      .select(col("qid"), col("qn"), col("nsub"), col("cid").as("code"),
-        vec_dot(col("qsv"), col("cv")).as("pdot")))
-    val sims = pruneToProbedCells(encodedCells, probes.cells)
+    topKPerQuery(pruneToProbedCells(encodedCells, probes.cells)
       .join(broadcast(probes.df), "cell")
-      .join(tables, Seq("qid", "nsub", "code"))
+      .join(adcTables(queries, idCol, vecCol, codebook, dim, m),
+        Seq("qid", "nsub", "code"))
       .filter(col("nid") =!= col("qid"))
       .groupBy("qid", "nid")
-      .agg(adcSim.as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+      .agg(adcSim.as("sim")), k)
   }
 
   /** Residual relation for by-residual PQ: (nid, cell, rv) with
@@ -882,33 +838,20 @@ object Similarity {
                                    vecCol: String, codebook: DataFrame,
                                    cents: DataFrame, dim: Int, m: Int,
                                    k: Int, nprobe: Int): DataFrame = {
-    import graft.functions.VecExpressions.{vec_dot, vec_norm}
-    val sub = dim / m
+    import graft.functions.VecExpressions.vec_dot
     val probes = localizeProbes(
       probeCells(queries, idCol, vecCol, cents, nprobe)
         .join(broadcast(cents.select(col("cid").as("cell"), col("cv"))), "cell")
         .select(col("qid"), col("cell"),
           vec_dot(col("qv"), col("cv")).as("qcdot"),
           vec_dot(col("cv"), col("cv")).as("cn2")))
-    val tables = broadcast(queries
-      .select(col(idCol).as("qid"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qn", vec_norm(col("qv")))
-      .select(col("qid"), col("qn"),
-        posexplode(array((0 until m).map(i =>
-          slice(col("qv"), i * sub + 1, sub)): _*)).as(Seq("nsub", "qsv")))
-      .join(codebook.withColumnRenamed("sub", "nsub"), "nsub")
-      .select(col("qid"), col("qn"), col("nsub"), col("cid").as("code"),
-        vec_dot(col("qsv"), col("cv")).as("pdot")))
-    val sims = pruneToProbedCells(encodedCells, probes.cells)
+    topKPerQuery(pruneToProbedCells(encodedCells, probes.cells)
       .join(broadcast(probes.df), "cell")
-      .join(tables, Seq("qid", "nsub", "code"))
+      .join(adcTables(queries, idCol, vecCol, codebook, dim, m),
+        Seq("qid", "nsub", "code"))
       .filter(col("nid") =!= col("qid"))
       .groupBy("qid", "nid")
-      .agg(residualAdcSim.as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+      .agg(residualAdcSim.as("sim")), k)
   }
 
   /** By-residual IVFADC — the encoding FAISS actually defaults to
@@ -924,9 +867,10 @@ object Similarity {
     * over precomputed cross terms ([[residualCodes]]) — so |sim| ≤ 1
     * and sim → exact cosine as quantization error → 0. Fully
     * deterministic (md5-seeded centroids and codebook), oracle-checked
-    * in s18/s19. */
-  /** In-session composition convenience (the gate shape): the
-    * residual chain re-derives per consumer here — the production
+    * in s18/s19.
+    *
+    * This is the in-session composition convenience (the gate shape):
+    * the residual chain re-derives per consumer here — the production
     * posture is [[writeIvfadcResidualIndex]] (which persists the
     * residual relation for the build) + [[ivfadcResidualTopKIndexed]]. */
   def ivfadcResidualTopK(corpus: DataFrame, queries: DataFrame,
@@ -934,9 +878,7 @@ object Similarity {
                          nlist: Int = 16, nprobe: Int = 4, m: Int = 4,
                          ks: Int = 16): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    val cents = broadcast(ivfCentroids(corpus, idCol, vecCol, nlist)
-      .withColumn("cn", vec_norm(col("cv"))))
+    val cents = normed(ivfCentroids(corpus, idCol, vecCol, nlist))
     val resid = residualVectors(corpus, idCol, vecCol, cents)
     val codebook = pqCodebook(resid, "nid", "rv", dim, m, ks)
     ivfadcResidualSearch(residualCodes(resid, codebook, cents, dim, m),
@@ -956,36 +898,25 @@ object Similarity {
                                trainIters: Int = 0,
                                balanceFactor: Double = 0.0): Unit = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    val spark = corpus.sparkSession
-    dropIndexSidecars(spark, table)
-    val cents0 =
-      if (balanceFactor > 0)
-        balancedIvfCentroids(corpus, idCol, vecCol, nlist, balanceFactor)
-      else ivfCentroids(corpus, idCol, vecCol, nlist)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
-    // resid feeds THREE consumers (codebook sample/training, the
-    // encode pass, the nid→cell join) — persist it for the build or
-    // each one replays the assignment + subtraction over the corpus
-    val resid = residualVectors(corpus, idCol, vecCol, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val codebook =
-        if (trainIters > 0) pqCodebookTrained(resid, "nid", "rv", dim, m, ks, trainIters)
-        else pqCodebook(resid, "nid", "rv", dim, m, ks)
-      codebook.write.mode("overwrite").format("parquet")
-        .option("path", s"${path}_codebook")
-        .saveAsTable(s"${table}_codebook")
-      cents0.select(col("cid"), toDoubleVec(col("cv")).as("cv"))
-      .write.mode("overwrite").format("parquet")
-        .option("path", s"${path}_centroids")
-        .saveAsTable(s"${table}_centroids")
-      graft.engine.Bucketing.writeBucketed(
-        residualCodes(resid, codebook, cents, dim, m),
-        table, path, Seq("cell"), buckets)
-      stampBuildGen(spark, table, s"${table}_centroids")
-      spark.catalog.refreshTable(table)
-    } finally { resid.unpersist(false); () }
+    PersistedIndex.build(corpus.sparkSession, table, Some("centroids")) {
+      val cents0 = coarseCentroids(corpus, idCol, vecCol, nlist,
+        balanceFactor)
+      val cents = normed(cents0)
+      // resid feeds THREE consumers (codebook sample/training, the
+      // encode pass, the nid→cell join) — persist it for the build or
+      // each one replays the assignment + subtraction over the corpus
+      val resid = residualVectors(corpus, idCol, vecCol, cents)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val codebook = codebookFor(resid, "nid", "rv", dim, m, ks,
+          trainIters)
+        PersistedIndex.writeSidecar(codebook, table, path, "codebook")
+        writeCentroids(cents0, table, path)
+        Bucketing.writeBucketed(
+          residualCodes(resid, codebook, cents, dim, m),
+          table, path, Seq("cell"), buckets)
+      } finally { resid.unpersist(false); () }
+    }
   }
 
   /** Append a new batch to a persisted by-residual index: assign to
@@ -997,19 +928,14 @@ object Similarity {
                                 table: String, dim: Int, m: Int = 4,
                                 buckets: Int = 8): Unit = {
     require(dim % m == 0, "m must divide dim")
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
+    val cents = storedCentroids(spark, table)
+    val codebook = storedCodebook(spark, table)
     // two consumers of the batch's residual relation (encode + the
     // nid→cell join) — persist for the duration of the append
     val resid = residualVectors(newVectors, idCol, vecCol, cents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      graft.engine.Bucketing.appendBucketed(
+      Bucketing.appendBucketed(
         residualCodes(resid, codebook, cents, dim, m),
         table, Seq("cell"), buckets)
       spark.catalog.refreshTable(table)
@@ -1024,17 +950,12 @@ object Similarity {
                                 vecCol: String, dim: Int, k: Int,
                                 nprobe: Int = 4, m: Int = 4,
                                 pred: Column = lit(true)): DataFrame = {
-    import graft.functions.VecExpressions.vec_norm
-    requireGenConsistent(spark, table, s"${table}_centroids")
-    val cents = broadcast(graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_centroids")
-      .withColumn("cn", vec_norm(col("cv"))))
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
+    val cents = storedCentroids(spark, table)
     ivfadcResidualSearch(
-      withoutDeleted(spark, table,
-        graft.engine.Bucketing.readBucketed(spark, table).filter(pred)),
-      queries, idCol, vecCol, codebook, cents, dim, m, k, nprobe)
+      PersistedIndex.withoutDeleted(spark, table,
+        Bucketing.readBucketed(spark, table).filter(pred)),
+      queries, idCol, vecCol, storedCodebook(spark, table), cents, dim, m,
+      k, nprobe)
   }
 
   /** Lloyd refinement of the [[ivfCentroids]] seed: `iters` rounds of
@@ -1278,16 +1199,17 @@ object Similarity {
     * compaction, and the old generation stays readable for in-flight
     * queries).
     *
-    * Two-artifact crash safety (r14 verdict #3): each artifact swaps
-    * through its own staged single-catalog-op path — the `_centroids`
-    * sidecar FIRST (its new data and new [[GenProp]] stamp land in one
-    * `alterTable`), then the assignment table (ditto). A crash between
-    * the two swaps leaves the artifacts at DIFFERENT generations,
-    * which every query/append that composes them detects and refuses
-    * LOUDLY ([[requireGenConsistent]] — not the silent short/empty
-    * results mismatched centroids used to produce); re-running the
-    * rebalance repairs it (the assignment table still holds the full
-    * union, so the retrain recomputes from scratch).
+    * Two-artifact crash safety (r14 verdict #3): the stamped staged
+    * two-swap of [[graft.engine.PersistedIndex.stageTwoSwap]] — the
+    * `_centroids` sidecar FIRST (its new data and new generation stamp
+    * land in one `alterTable`), then the assignment table (ditto). A
+    * crash between the two swaps leaves the artifacts at DIFFERENT
+    * generations, which every query/append that composes them detects
+    * and refuses LOUDLY ([[graft.engine.PersistedIndex.readModel]] —
+    * not the silent short/empty results mismatched centroids used to
+    * produce); re-running the rebalance repairs it (the assignment
+    * table still holds the full union, so the retrain recomputes from
+    * scratch).
     *
     * End state ≡ a fresh [[writeIvfIndex]] with the same
     * (nlist, balanceFactor) over the union corpus — OperatorsSpec pins
@@ -1295,12 +1217,9 @@ object Similarity {
     * cycle (SCALING r14). */
   def rebalanceIvfIndex(spark: SparkSession, table: String, nlist: Int,
                         maxFactor: Double = 2.0, maxRounds: Int = 16,
-                        refineIters: Int = 0): Unit = {
-    val gen = stageIvfRebalance(spark, table, nlist, maxFactor,
-      maxRounds, refineIters)
-    graft.engine.Bucketing.swapToStaged(spark, table,
-      Map(GenProp -> gen))
-  }
+                        refineIters: Int = 0): Unit =
+    PersistedIndex.commitTwoSwap(spark, table, stageIvfRebalance(spark,
+      table, nlist, maxFactor, maxRounds, refineIters))
 
   /** Everything in [[rebalanceIvfIndex]] up to — not including — the
     * assignment table's commit swap: retrain, sidecar swap (new
@@ -1312,21 +1231,15 @@ object Similarity {
                                        nlist: Int, maxFactor: Double,
                                        maxRounds: Int = 16,
                                        refineIters: Int = 0): String = {
-    import graft.functions.VecExpressions.vec_norm
-    val gen = newGen()
-    val stored = graft.engine.Bucketing.readBucketed(spark, table)
+    val stored = Bucketing.readBucketed(spark, table)
       .select(col("nid"), col("nv"))
     // a driver-local relation (balancedIvfCentroids collects each
     // round), so the sidecar write and the reassignment below see the
     // SAME centroids with no recompute between them
     val cents0 = balancedIvfCentroids(stored, "nid", "nv", nlist,
       maxFactor, maxRounds, refineIters)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
-    graft.engine.Bucketing.rewriteTable(spark, s"${table}_centroids",
-      _ => cents0, Map(GenProp -> gen))
-    graft.engine.Bucketing.stageCompaction(spark, table,
-      df => cellAssignment(df, "nid", "nv", cents).drop("csim"))
-    gen
+    PersistedIndex.stageTwoSwap(spark, table, "centroids", cents0,
+      df => cellAssignment(df, "nid", "nv", normed(cents0)).drop("csim"))
   }
 
   /** Retrain and re-assign a persisted CODES index's coarse cells —
@@ -1340,43 +1253,31 @@ object Similarity {
     * tombstones are excluded here and applied physically by the
     * rewrite, like [[compactIndex]]).
     *
-    * Shared two-swap discipline: balanced centroids retrain from the
-    * raw store; the `_centroids` sidecar swaps first (new data + new
-    * [[GenProp]] stamp, one catalog op); `transform(oldRows, rawClean,
-    * cents)` stages the rewritten codes; the table swap commits with
-    * the same stamp. A crash between the swaps is detected loudly by
-    * [[requireGenConsistent]] on every subsequent query/append;
-    * re-running repairs. The retained `_codebook` is untouched — it is
-    * the PQ model artifact; only the coarse quantizer retrains. */
+    * Shared two-swap discipline ([[graft.engine.PersistedIndex.retrain]]):
+    * balanced centroids retrain from the tombstone-cleaned raw store;
+    * the `_centroids` sidecar swaps first (new data + new generation
+    * stamp, one catalog op); `transform(oldRows, rawClean, cents)`
+    * stages the rewritten codes; the table swap commits with the same
+    * stamp. A crash between the swaps is detected loudly on every
+    * subsequent query/append; re-running repairs. The retained
+    * `_codebook` is untouched — it is the PQ model artifact; only the
+    * coarse quantizer retrains. */
   private def rebalanceCodesIndex(spark: SparkSession, table: String,
                                   raw: DataFrame, idCol: String,
                                   vecCol: String, nlist: Int,
                                   maxFactor: Double, maxRounds: Int)
-                                 (transform: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit = {
-    import graft.functions.VecExpressions.vec_norm
-    val gen = newGen()
-    val hadTombstones = pendingTombstones(spark, table).nonEmpty
+                                 (transform: (DataFrame, DataFrame, DataFrame) => DataFrame): Unit =
     // the vector column passes through UNCAST (numVec's float
     // tolerance applies downstream) so the retrain/assignment floats
     // are bit-identical to a fresh build over the same relation
-    val rawClean0 = raw.select(col(idCol).as("nid"),
-      col(vecCol).as("rv0"))
-    val rawClean = pendingTombstones(spark, table)
-      .fold(rawClean0)(t =>
-        rawClean0.join(broadcast(t), Seq("nid"), "left_anti"))
-    val cents0 = balancedIvfCentroids(rawClean, "nid", "rv0", nlist,
-      maxFactor, maxRounds)
-    val cents = broadcast(cents0.withColumn("cn", vec_norm(col("cv"))))
-    graft.engine.Bucketing.rewriteTable(spark, s"${table}_centroids",
-      _ => cents0, Map(GenProp -> gen))
-    val origCols = spark.table(table).columns
-    graft.engine.Bucketing.stageCompaction(spark, table,
-      old => transform(old, rawClean, cents)
+    PersistedIndex.retrain(spark, table, "centroids",
+        raw.select(col(idCol).as("nid"), col(vecCol).as("rv0"))) { rawClean =>
+      val cents0 = balancedIvfCentroids(rawClean, "nid", "rv0", nlist,
+        maxFactor, maxRounds)
+      val origCols = spark.table(table).columns
+      (cents0, old => transform(old, rawClean, normed(cents0))
         .select(origCols.map(col).toIndexedSeq: _*))
-    graft.engine.Bucketing.swapToStaged(spark, table,
-      Map(GenProp -> gen))
-    if (hadTombstones) truncateTombstones(spark, table)
-  }
+    }
 
   /** Rebalance a persisted (non-residual) IVFADC index from its
     * raw-vector store. The global codebook means PQ codes are
@@ -1410,47 +1311,22 @@ object Similarity {
                                    maxRounds: Int = 16): Unit =
     rebalanceCodesIndex(spark, table, raw, idCol, vecCol, nlist,
         maxFactor, maxRounds) { (_, rawClean, cents) =>
-      val codebook = graft.engine.Bucketing
-        .readBucketed(spark, s"${table}_codebook")
       residualCodes(residualVectors(rawClean, "nid", "rv0", cents),
-        codebook, cents, dim, m)
+        storedCodebook(spark, table), cents, dim, m)
     }
-
-  /** Max data files in any one bucket of the table's CURRENT location
-    * — the layout-decay readout for the maintenance no-op guard (the
-    * bucket id is the `_NNNNN` suffix Spark's bucketed writer puts
-    * before `.c000`). One driver-side directory listing. */
-  private[graft] def maxFilesPerBucket(spark: SparkSession, table: String): Int = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
-    val bucketId = "_(\\d{5})\\.c".r
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(loc).map(_.getPath.getName)
-      .flatMap(n => bucketId.findFirstMatchIn(n).map(_.group(1)))
-      .groupBy(identity).values.map(_.length).maxOption.getOrElse(0)
-  }
 
   /** The shared occupancy-triggered maintenance policy — ties the
     * drift readout to its repair (ProfRebalance measured both sides,
     * SCALING r14): read the cell occupancy of the stored
     * assignment/code rows (one bounded aggregate — ≤4096 cells by the
-    * centroid contract), then
-    *
-    *  - max/p50 above `rebalanceAbove` → `rebalance` (retrain +
-    *    rewrite + swap; a build-shaped batch job that restores the
-    *    straggler/scan bound — 11.7 → 1.8 measured on the
-    *    shifted-append fixture);
-    *  - else, if the layout decayed (> one file in some bucket) or
-    *    deletes pend → [[compactIndex]] (cheap layout restore;
-    *    tombstones apply physically);
-    *  - else → NO-OP (r14 verdict #2: the healthy branch used to pay
-    *    a full-index rewrite — ~half a build — on every policy tick;
-    *    a healthy index now costs one aggregate and one directory
-    *    listing).
-    *
-    * Returns the action taken ("rebalanced"/"compacted"/"healthy")
-    * with the observed bound, so a scheduler can log the decision. */
+    * centroid contract); max/p50 above `rebalanceAbove` runs
+    * `rebalance` (retrain + rewrite + swap; a build-shaped batch job
+    * that restores the straggler/scan bound — 11.7 → 1.8 measured on
+    * the shifted-append fixture), otherwise the cheap tiers of
+    * [[graft.engine.PersistedIndex.maintain]] apply: compact when the
+    * layout decayed or deletes pend, else NO-OP (r14 verdict #2: the
+    * healthy branch used to pay a full-index rewrite on every tick).
+    * Returns the action taken with the observed bound. */
   private def maintainCellIndex(spark: SparkSession, table: String,
                                 rebalanceAbove: Double)
                                (rebalance: () => Unit): String = {
@@ -1458,15 +1334,9 @@ object Similarity {
       .orderBy(col("count").desc).collect().map(_.getLong(1))
     require(counts.nonEmpty, s"index $table has no assignments")
     val bound = counts.head.toDouble / counts(counts.length / 2)
-    if (bound > rebalanceAbove) {
-      rebalance()
-      f"rebalanced (max/p50 was $bound%.1f > $rebalanceAbove%.1f)"
-    } else if (maxFilesPerBucket(spark, table) > 1 ||
-               pendingTombstones(spark, table).nonEmpty) {
-      compactIndex(spark, table)
-      f"compacted (max/p50 $bound%.1f within $rebalanceAbove%.1f)"
-    } else
-      f"healthy (max/p50 $bound%.1f, minimal layout, no pending deletes)"
+    PersistedIndex.maintain(spark, table,
+      rebalance = Some(rebalance).filter(_ => bound > rebalanceAbove),
+      observed = f"max/p50 $bound%.1f, rebalance above $rebalanceAbove%.1f")
   }
 
   /** [[maintainCellIndex]] over a raw-vector IVF index
@@ -1562,7 +1432,16 @@ object Similarity {
     * memory and one that spills. Cosine over quantized vectors needs no
     * dequantization: per-vector scales cancel, so downstream search runs
     * on the int values directly ([[quantizedTopK]]). Zero vectors keep
-    * scale 0 and quantize to zeros. */
+    * scale 0 and quantize to zeros.
+    *
+    * Deliberately NOT the SQ8 encoder ([[sq8TopK]]/[[writeSq8Index]]):
+    * this scale is per VECTOR and symmetric, so it cancels in cosine
+    * and needs no stored model; SQ8 quantizes per DIMENSION to 256
+    * levels of the corpus-wide [lo, hi] range (Δ = (hi − lo)/256) and
+    * persists those ranges as its model. The two produce different
+    * values for the same vector, and s04's oracle pins this int8
+    * rounding, so folding one into the other would change a gated
+    * result. */
   def quantizeInt8(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
       .withColumn("qscale", array_max(transform(col("v"), x => abs(x))) / lit(127.0))
@@ -1585,29 +1464,6 @@ object Similarity {
     bruteForceTopK(dq(corpus), dq(queries), idCol, vecCol, k)
   }
 
-  /** Product-quantization ANN (the third classic scale path next to LSH
-    * and IVF; Jégou et al., "Product Quantization for Nearest Neighbor
-    * Search", TPAMI 2011 — public literature): split each vector into
-    * `m` subvectors, quantize each against a per-subspace codebook of
-    * `ks` centroids, score queries with an asymmetric-distance table —
-    * per subspace the query's dot product with every centroid, summed
-    * over the corpus vector's codes. Corpus state shrinks from dim
-    * floats to m single-byte codes (~32× at dim 64 / m 4); the scoring
-    * join touches codes, never vectors.
-    *
-    * Deterministic codebook: the `ks` corpus vectors with the smallest
-    * `md5("pq" + id)` donate their subvectors (the [[ivfCentroids]]
-    * sampling trick) — reproducible by an external oracle, which is why
-    * this is oracle-checked rather than rows-only. Cosine-style score:
-    * dot(q, x̂) / (‖q‖·‖x̂‖) with x̂ the reconstruction; ties toward the
-    * smaller centroid id, then smaller corpus id.
-    *
-    * Scale shape: the codebook (m·ks subvectors) broadcasts everywhere;
-    * encoding is a map-side min-struct aggregate per (vector, subspace)
-    * — one shuffle on id; the ADC join is (corpus codes) ⋈ broadcast
-    * (query tables) on (subspace, code), one more shuffle for the
-    * per-(query, vector) sum. Recall < 1 by construction (quantization
-    * error), the standard PQ trade. */
   /** PQ codebook: ks sampled vectors × m subspaces, one row per
     * (subspace, centroid) with the centroid's squared norm —
     * (cid, sub, cv, cn2). Deterministic md5-ordered sample. */
@@ -1712,6 +1568,18 @@ object Similarity {
     }.toSeq.toDF("cid", "sub", "cv", "cn2")
   }
 
+  /** The codebook a build trains: Lloyd-trained for `trainIters` > 0,
+    * else the md5 sample. */
+  private def codebookFor(corpus: DataFrame, idCol: String, vecCol: String,
+                          dim: Int, m: Int, ks: Int,
+                          trainIters: Int): DataFrame =
+    if (trainIters > 0) pqCodebookTrained(corpus, idCol, vecCol, dim, m, ks, trainIters)
+    else pqCodebook(corpus, idCol, vecCol, dim, m, ks)
+
+  /** A persisted index's `_codebook` model. */
+  private def storedCodebook(spark: SparkSession, table: String): DataFrame =
+    PersistedIndex.readModel(spark, table, "codebook")
+
   /** PQ corpus codes: nearest codebook centroid per (vector, subspace)
     * by L2 — argmin ‖x−c‖² = argmin (‖c‖² − 2·x·c); ties toward smaller
     * cid. Returns (nid, nsub, code, codeN2).
@@ -1786,12 +1654,23 @@ object Similarity {
   private def pqAdcSearch(encoded: DataFrame, queries: DataFrame,
                           idCol: String, vecCol: String,
                           codebook: DataFrame, dim: Int, m: Int,
-                          k: Int): DataFrame = {
+                          k: Int): DataFrame =
+    topKPerQuery(encoded
+      .join(adcTables(queries, idCol, vecCol, codebook, dim, m),
+        Seq("nsub", "code"))
+      .filter(col("nid") =!= col("qid"))
+      .groupBy("qid", "nid")
+      .agg(adcSim.as("sim")), k)
+
+  /** The ADC tables every PQ-family query scores against: per query ×
+    * subspace × codebook centroid the partial dot product,
+    * (qid, qn, nsub, code, pdot), broadcast (the query set is small by
+    * contract — same as [[bruteForceTopK]]). */
+  private def adcTables(queries: DataFrame, idCol: String, vecCol: String,
+                        codebook: DataFrame, dim: Int, m: Int): DataFrame = {
     import graft.functions.VecExpressions.{vec_dot, vec_norm}
     val sub = dim / m
-    // ADC tables: query × subspace × centroid partial dot products
-    // (query set is small by contract — same as bruteForceTopK)
-    val tables = broadcast(queries
+    broadcast(queries
       .select(col(idCol).as("qid"), toDoubleVec(col(vecCol)).as("qv"))
       .withColumn("qn", vec_norm(col("qv")))
       .select(col("qid"), col("qn"),
@@ -1800,14 +1679,6 @@ object Similarity {
       .join(codebook.withColumnRenamed("sub", "nsub"), "nsub")
       .select(col("qid"), col("qn"), col("nsub"), col("cid").as("code"),
         vec_dot(col("qsv"), col("cv")).as("pdot")))
-    val sims = encoded.join(tables, Seq("nsub", "code"))
-      .filter(col("nid") =!= col("qid"))
-      .groupBy("qid", "nid")
-      .agg(adcSim.as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
   }
 
   /** The ADC score aggregate with EXACT partial sums: pdot and codeN2
@@ -1823,13 +1694,35 @@ object Similarity {
       (max(col("qn")) * sqrt(sum(col("codeN2").cast(dec)).cast("double")))
   }
 
+  /** Product-quantization ANN (the third classic scale path next to LSH
+    * and IVF; Jégou et al., "Product Quantization for Nearest Neighbor
+    * Search", TPAMI 2011 — public literature): split each vector into
+    * `m` subvectors, quantize each against a per-subspace codebook of
+    * `ks` centroids, score queries with an asymmetric-distance table —
+    * per subspace the query's dot product with every centroid, summed
+    * over the corpus vector's codes. Corpus state shrinks from dim
+    * floats to m single-byte codes (~32× at dim 64 / m 4); the scoring
+    * join touches codes, never vectors.
+    *
+    * Deterministic codebook: the `ks` corpus vectors with the smallest
+    * `md5("pq" + id)` donate their subvectors (the [[ivfCentroids]]
+    * sampling trick) — reproducible by an external oracle, which is why
+    * this is oracle-checked rather than rows-only. Cosine-style score:
+    * dot(q, x̂) / (‖q‖·‖x̂‖) with x̂ the reconstruction; ties toward the
+    * smaller centroid id, then smaller corpus id.
+    *
+    * Scale shape: the codebook (m·ks subvectors) broadcasts everywhere;
+    * encoding is a map-side min-struct aggregate per (vector, subspace)
+    * — one shuffle on id; the ADC join is (corpus codes) ⋈ broadcast
+    * (query tables) on (subspace, code), one more shuffle for the
+    * per-(query, vector) sum. Recall < 1 by construction (quantization
+    * error), the standard PQ trade. `trainIters` > 0 Lloyd-trains the
+    * codebook ([[pqCodebookTrained]]). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, dim: Int, k: Int, m: Int = 4,
              ks: Int = 16, trainIters: Int = 0): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    val codebook =
-      if (trainIters > 0) pqCodebookTrained(corpus, idCol, vecCol, dim, m, ks, trainIters)
-      else pqCodebook(corpus, idCol, vecCol, dim, m, ks)
+    val codebook = codebookFor(corpus, idCol, vecCol, dim, m, ks, trainIters)
     val encoded = pqEncode(corpus, idCol, vecCol, codebook, dim, m)
     pqAdcSearch(encoded, queries, idCol, vecCol, codebook, dim, m, k)
   }
@@ -1846,18 +1739,14 @@ object Similarity {
                    ks: Int = 16, buckets: Int = 8,
                    trainIters: Int = 0): Unit = {
     require(dim % m == 0, "m must divide dim")
-    val spark = corpus.sparkSession
-    dropIndexSidecars(spark, table)
-    val codebook =
-      if (trainIters > 0) pqCodebookTrained(corpus, idCol, vecCol, dim, m, ks, trainIters)
-      else pqCodebook(corpus, idCol, vecCol, dim, m, ks)
-    codebook.write.mode("overwrite").format("parquet")
-      .option("path", s"${path}_codebook")
-      .saveAsTable(s"${table}_codebook")
-    graft.engine.Bucketing.writeBucketed(
-      pqEncode(corpus, idCol, vecCol, codebook, dim, m),
-      table, path, Seq("nid"), buckets)
-    spark.catalog.refreshTable(table)
+    PersistedIndex.build(corpus.sparkSession, table) {
+      val codebook = codebookFor(corpus, idCol, vecCol, dim, m, ks,
+        trainIters)
+      PersistedIndex.writeSidecar(codebook, table, path, "codebook")
+      Bucketing.writeBucketed(
+        pqEncode(corpus, idCol, vecCol, codebook, dim, m),
+        table, path, Seq("nid"), buckets)
+    }
   }
 
   /** Append a NEW vector batch to a persisted PQ index without
@@ -1875,10 +1764,9 @@ object Similarity {
                     idCol: String, vecCol: String, table: String,
                     dim: Int, m: Int = 4, buckets: Int = 8): Unit = {
     require(dim % m == 0, "m must divide dim")
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
-    graft.engine.Bucketing.appendBucketed(
-      pqEncode(newVectors, idCol, vecCol, codebook, dim, m),
+    Bucketing.appendBucketed(
+      pqEncode(newVectors, idCol, vecCol, storedCodebook(spark, table),
+        dim, m),
       table, Seq("nid"), buckets)
     spark.catalog.refreshTable(table)
   }
@@ -1901,167 +1789,22 @@ object Similarity {
     * here (anti-joined out of the rewrite — compaction already
     * rewrites every row, so deletes ride free) and the tombstone set
     * is then truncated: post-compaction queries pay no anti-join. */
-  def compactIndex(spark: SparkSession, table: String): Unit = {
-    val tomb = s"${table}_tombstones"
-    if (spark.catalog.tableExists(tomb) && !spark.table(tomb).isEmpty) {
-      val t = broadcast(spark.table(tomb))
-      graft.engine.Bucketing.compactBucketed(spark, table,
-        df => df.join(t, Seq("nid"), "left_anti"))
-      truncateTombstones(spark, table)
-    } else graft.engine.Bucketing.compactBucketed(spark, table)
-  }
-
-  /** A fresh build carries no pending deletes: drop any stale
-    * tombstone sidecar a previous generation of `table` left behind
-    * (catalog-only; the overwrite on the next delete reclaims the
-    * files). Called by every write* entry point. */
-  private[graft] def dropTombstones(spark: SparkSession, table: String): Unit =
-    spark.sessionState.catalog.dropTable(
-      spark.sessionState.sqlParser.parseTableIdentifier(s"${table}_tombstones"),
-      ignoreIfNotExists = true, purge = false)
-
-  /** A fresh build invalidates EVERY ingest-lifecycle sidecar the
-    * previous generation of `table` left behind: the pending-tombstone
-    * set AND the streaming applied-batch ledger (ADVICE r14: a rebuilt
-    * index fed by a new stream restarts batch ids at 0 — a stale
-    * `_batches` ledger would match them and silently skip the first
-    * appends). Catalog-only drops; the next writer at the same path
-    * overwrite-reclaims the files. Called by every write* entry
-    * point. */
-  private[graft] def dropIndexSidecars(spark: SparkSession, table: String): Unit = {
-    dropTombstones(spark, table)
-    spark.sessionState.catalog.dropTable(
-      spark.sessionState.sqlParser.parseTableIdentifier(s"${table}_batches"),
-      ignoreIfNotExists = true, purge = false)
-  }
-
-  /** Reset a physically-applied tombstone set to empty (same schema,
-    * same sidecar path) — called by [[compactIndex]] after the rewrite
-    * so post-compaction queries pay no anti-join. */
-  private[graft] def truncateTombstones(spark: SparkSession, table: String): Unit = {
-    val tomb = s"${table}_tombstones"
-    val schema = spark.table(tomb).schema
-    val loc = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(tomb))
-      .location.toString.stripSuffix("/")
-    spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      .write.mode("overwrite").format("parquet")
-      .option("path", loc).saveAsTable(tomb)
-  }
+  def compactIndex(spark: SparkSession, table: String): Unit =
+    PersistedIndex.compact(spark, table)
 
   /** Mark index rows deleted — FAISS `remove_ids()` semantics on the
     * persisted indexes: `ids` (any one-column-projectable relation,
     * e.g. a dedup keep-list's drop side) append to a `_tombstones`
-    * sidecar; every `*TopKIndexed` query anti-joins it out
-    * ([[withoutDeleted]]), and the next [[compactIndex]] applies it
-    * physically and truncates it. Without this the engine's own dedup
-    * verdicts (d10/d20/t24) could never retract an already-indexed
-    * near-duplicate short of a full rebuild. The tombstone set is a
-    * small broadcast side by construction (deletes between compactions,
-    * not the corpus). */
+    * sidecar keyed by `nid`; every `*TopKIndexed` query anti-joins it
+    * out ([[graft.engine.PersistedIndex.withoutDeleted]]), and the next
+    * [[compactIndex]] applies it physically and truncates it. Without
+    * this the engine's own dedup verdicts (d10/d20/t24) could never
+    * retract an already-indexed near-duplicate short of a full
+    * rebuild. The tombstone set is a small broadcast side by
+    * construction (deletes between compactions, not the corpus). */
   def deleteFromIndex(spark: SparkSession, table: String, ids: DataFrame,
-                      idCol: String = "nid"): Unit = {
-    val tomb = s"${table}_tombstones"
-    val rows = ids.select(col(idCol).as("nid")).distinct()
-    if (spark.catalog.tableExists(tomb))
-      rows.write.mode("append").format("parquet").saveAsTable(tomb)
-    else
-      rows.write.mode("overwrite").format("parquet")
-        .option("path", s"${indexBasePath(spark, table)}_tombstones")
-        .saveAsTable(tomb)
-  }
-
-  /** Catalog table property carrying the model-artifact generation
-    * stamp — set on BOTH an index's primary (assignment/code) table
-    * and its model sidecar (`_centroids`), always to the same value by
-    * any completed build or rebalance. A property, not a column, so
-    * the stamp travels IN the same catalog `alterTable` that swaps the
-    * data location: there is no instant at which a swapped artifact
-    * carries the wrong generation. */
-  private[graft] val GenProp = "graft.model.gen"
-
-  private def newGen(): String = java.util.UUID.randomUUID().toString
-
-  /** Stamp a table's catalog entry with the model-artifact generation.
-    * Builds call it right after their writes (builds are blunt
-    * overwrites, not claimed crash-safe); MAINTENANCE swaps never use
-    * it — they pass the stamp to the staged swap
-    * ([[graft.engine.Bucketing.swapToStaged]]/`rewriteTable`) so data
-    * and stamp flip in one catalog op. */
-  private def setTableGen(spark: SparkSession, table: String,
-                          gen: String): Unit = {
-    val catalog = spark.sessionState.catalog
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = catalog.getTableMetadata(ident)
-    catalog.alterTable(meta.copy(properties =
-      meta.properties + (GenProp -> gen)))
-  }
-
-  private def tableGen(spark: SparkSession, table: String): Option[String] =
-    spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties.get(GenProp)
-
-  /** Fail LOUD instead of silently wrong when an interrupted
-    * two-artifact maintenance left `table`'s rows and `sidecar`'s
-    * model artifact at different generations (r14 verdict #2: a crash
-    * between a rebalance's two swaps leaves new centroids with old
-    * assignments — probeCells then probes cell ids absent from the
-    * table and queries return short/empty results, worse than stale).
-    * Both artifacts carry the shared [[GenProp]] stamp, each flipped
-    * atomically with its own data by the staged swaps; a mismatch
-    * means the maintenance op must re-run before the index is
-    * queryable. Absent stamps (legacy artifacts) skip the check.
-    * Called by every query/append path that composes the two
-    * artifacts. */
-  private def requireGenConsistent(spark: SparkSession, table: String,
-                                   sidecar: String): Unit =
-    for (tg <- tableGen(spark, table); sg <- tableGen(spark, sidecar))
-      require(tg == sg,
-        s"index $table is mid-maintenance: its rows are generation " +
-          s"$tg but $sidecar is generation $sg — an interrupted " +
-          "rebalance/rebuild left the two artifacts inconsistent; " +
-          "re-run the maintenance op to repair before querying")
-
-  /** Stamp a freshly-built index's primary table and model sidecar
-    * with one shared generation ([[GenProp]]) so the mid-maintenance
-    * detector has a baseline to compare against. */
-  private def stampBuildGen(spark: SparkSession, table: String,
-                            sidecar: String): Unit = {
-    val gen = newGen()
-    setTableGen(spark, table, gen)
-    setTableGen(spark, sidecar, gen)
-  }
-
-  /** The index table's base data path — its current location with the
-    * compaction ping-pong suffix stripped, so sidecars written after a
-    * [[compactIndex]] land beside the original artifacts. */
-  private[graft] def indexBasePath(spark: SparkSession, table: String): String =
-    spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .location.toString.stripSuffix("/").replaceAll("__c[12]$", "")
-
-  /** Anti-join the index's tombstone set, if any — the query-time half
-    * of [[deleteFromIndex]]. No tombstone table, or an empty one →
-    * the relation passes through untouched, so never-deleted indexes
-    * (every other gate row) keep their exact plans. The anti-join
-    * broadcasts the tombstones and sits ABOVE the scan filters, so
-    * bucket pruning and pushed predicates are undisturbed. */
-  private def withoutDeleted(spark: SparkSession, table: String,
-                             df: DataFrame): DataFrame =
-    pendingTombstones(spark, table)
-      .fold(df)(t => df.join(broadcast(t), Seq("nid"), "left_anti"))
-
-  /** The index's pending tombstone set, if any (None when the sidecar
-    * is absent or empty — never-deleted indexes keep exact plans). */
-  private def pendingTombstones(spark: SparkSession,
-                                table: String): Option[DataFrame] =
-    if (!spark.catalog.tableExists(s"${table}_tombstones")) None
-    else {
-      val t = spark.table(s"${table}_tombstones")
-      if (t.isEmpty) None else Some(t)
-    }
+                      idCol: String = "nid"): Unit =
+    PersistedIndex.delete(table, ids, idCol, "nid")
 
   /** Query a persisted PQ index: identical results to [[pqTopK]] with
     * the same (dim, m, ks, k) — codebook and codes are read back, not
@@ -2070,11 +1813,10 @@ object Similarity {
   def pqTopKIndexed(spark: SparkSession, table: String, queries: DataFrame,
                     idCol: String, vecCol: String, dim: Int, k: Int,
                     m: Int = 4, pred: Column = lit(true)): DataFrame = {
-    val codebook = graft.engine.Bucketing
-      .readBucketed(spark, s"${table}_codebook")
+    val codebook = storedCodebook(spark, table)
     pqAdcSearch(
-      withoutDeleted(spark, table,
-        graft.engine.Bucketing.readBucketed(spark, table).filter(pred)),
+      PersistedIndex.withoutDeleted(spark, table,
+        Bucketing.readBucketed(spark, table).filter(pred)),
       queries, idCol, vecCol, codebook, dim, m, k)
   }
 
@@ -2092,22 +1834,26 @@ object Similarity {
     * side contributes one id-keyed join for the full vectors. */
   def pqRerankTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, dim: Int, k: Int, kCand: Int,
-                   m: Int = 4, ks: Int = 16): DataFrame = {
+                   m: Int = 4, ks: Int = 16): DataFrame =
+    exactRerank(pqTopK(corpus, queries, idCol, vecCol, dim, kCand, m, ks),
+      corpus, queries, idCol, vecCol, k)
+
+  /** Stage 2 of two-stage retrieval: re-score only the (qid, nid)
+    * candidate pairs with exact cosine over the full vectors of
+    * `corpus` and keep the top `k` per query. */
+  private def exactRerank(candidates: DataFrame, corpus: DataFrame,
+                          queries: DataFrame, idCol: String, vecCol: String,
+                          k: Int): DataFrame = {
     import graft.functions.VecExpressions.{vec_dot, vec_norm}
-    val cand = pqTopK(corpus, queries, idCol, vecCol, dim, kCand, m, ks)
-      .select(col("qid"), col("nid"))
+    val cand = candidates.select(col("qid"), col("nid"))
     val cv = corpus.select(col(idCol).as("nid"),
       toDoubleVec(col(vecCol)).as("nv"))
     val qv = broadcast(queries.select(col(idCol).as("qid"),
       toDoubleVec(col(vecCol)).as("qv")))
-    val scored = cand.join(qv, "qid").join(cv, "nid")
+    topKPerQuery(cand.join(qv, "qid").join(cv, "nid")
       .select(col("qid"), col("nid"),
         (vec_dot(col("qv"), col("nv")) /
-          (vec_norm(col("qv")) * vec_norm(col("nv")))).as("sim"))
-    val w2 = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+          (vec_norm(col("qv")) * vec_norm(col("nv")))).as("sim")), k)
   }
 
   /** Two-stage retrieval over a PERSISTED IVFADC index — the actual
@@ -2124,25 +1870,11 @@ object Similarity {
                               corpus: DataFrame, queries: DataFrame,
                               idCol: String, vecCol: String, dim: Int,
                               k: Int, kCand: Int, nprobe: Int = 4,
-                              m: Int = 4, pred: Column = lit(true)): DataFrame = {
-    import graft.functions.VecExpressions.{vec_dot, vec_norm}
+                              m: Int = 4, pred: Column = lit(true)): DataFrame =
     // `pred` restricts stage 1's candidate generation (the codes scan)
     // — the exact re-rank then only ever sees passing candidates
-    val cand = ivfadcTopKIndexed(spark, table, queries, idCol, vecCol,
-      dim, kCand, nprobe, m, pred).select(col("qid"), col("nid"))
-    val cv = corpus.select(col(idCol).as("nid"),
-      toDoubleVec(col(vecCol)).as("nv"))
-    val qv = broadcast(queries.select(col(idCol).as("qid"),
-      toDoubleVec(col(vecCol)).as("qv")))
-    val scored = cand.join(qv, "qid").join(cv, "nid")
-      .select(col("qid"), col("nid"),
-        (vec_dot(col("qv"), col("nv")) /
-          (vec_norm(col("qv")) * vec_norm(col("nv")))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
-  }
+    exactRerank(ivfadcTopKIndexed(spark, table, queries, idCol, vecCol,
+      dim, kCand, nprobe, m, pred), corpus, queries, idCol, vecCol, k)
 
   /** Bucketed ANN: candidates restricted to the query's LSH bucket, then
     * exact cosine top-k within the bucket. Recall < 1 by construction —
@@ -2157,13 +1889,9 @@ object Similarity {
     val bc = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"),
       lshBucket(col(vecCol), dim, nbits).as("bucket"))
       .withColumn("nn", vec_norm(col("nv")))
-    val sims = bc.join(bq, Seq("bucket")).filter(col("nid") =!= col("qid"))
+    topKPerQuery(bc.join(bq, Seq("bucket")).filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim"), 6).as("sim"), col("rank"))
+        (vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("sim")), k)
   }
 
   /** ANN quality audit — per-query recall of an approximate result set

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQ
 import org.apache.spark.sql.types.StructType
 
 import graft.core.CurieMap
+import graft.engine.PersistedIndex
 import graft.sinks.TripleSinks
 
 /** Structured-Streaming form of the engine's pipelines.
@@ -245,23 +246,18 @@ object EventStream {
     *     the audit relation a release pipeline joins.
     *
     * At-least-once redelivery is a no-op via the scoped applied-batch
-    * ledger; a redelivered batch neither duplicates index rows nor
-    * re-emits verdicts. */
+    * ledger ([[graft.engine.PersistedIndex.applyOnce]]); a redelivered
+    * batch neither duplicates index rows nor re-emits verdicts. */
   def minhashDedupIngest(docs: DataFrame, idCol: String, textCol: String,
                          table: String, checkpoint: String,
                          numPerm: Int = 32, bands: Int = 8,
                          threshold: Double = 0.5, shingleN: Int = 3,
                          family: String = "xxhash64",
                          buckets: Int = 8): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentMinhashDedup(batch, id, checkpoint, idCol, textCol,
-          table, numPerm, bands, threshold, shingleN, family, buckets)
-        ()
-      }
-      .start()
+    PersistedIndex.ingest(docs, table, checkpoint) { (batch, id) =>
+      idempotentMinhashDedup(batch, id, checkpoint, idCol, textCol,
+        table, numPerm, bands, threshold, shingleN, family, buckets)
+    }
 
   private[graft] def idempotentMinhashDedup(batch: DataFrame, batchId: Long,
                                             scope: String, idCol: String,
@@ -270,7 +266,7 @@ object EventStream {
                                             threshold: Double, shingleN: Int,
                                             family: String,
                                             buckets: Int): Boolean =
-    idempotentAppend(batch, batchId, scope, table) { spark =>
+    PersistedIndex.applyOnce(batch, batchId, scope, table) { spark =>
       import graft.operators.Dedup
       // both helpers return |batch|-bounded PERSISTED results (the
       // finalized() convention) — release them per trigger or a
@@ -298,17 +294,11 @@ object EventStream {
         .join(drops, Seq("id"), "left")
         .select(col("id"), col("dup_of").isNull.as("kept"),
           col("dup_of"))
-      val vt = s"${table}_verdicts"
-      if (spark.catalog.tableExists(vt))
-        verdicts.write.mode("append").format("parquet").saveAsTable(vt)
-      else
-        verdicts.write.mode("overwrite").format("parquet")
-          .option("path",
-            s"${graft.operators.Similarity.indexBasePath(spark, table)}_verdicts")
-          .saveAsTable(vt)
+      PersistedIndex.appendSidecar(verdicts, table, PersistedIndex.Verdicts)
       vsIndex0.unpersist(); intra0.unpersist()
       val accepted = batch.join(
-        spark.table(vt).filter(col("kept")).select(col("id").as(idCol)),
+        spark.table(PersistedIndex.sidecar(table, PersistedIndex.Verdicts))
+          .filter(col("kept")).select(col("id").as(idCol)),
         Seq(idCol), "left_semi")
       Dedup.appendMinhashIndex(spark, accepted, idCol, textCol, table,
         numPerm, bands, shingleN, family, buckets)
@@ -325,39 +315,28 @@ object EventStream {
     * Idempotent under foreachBatch's at-least-once redelivery (ADVICE
     * r13) via [[idempotentPqAppend]]. StreamingSpec proves the drained
     * stream ≡ the batch build+append and that a redelivered batch id
-    * is a no-op. */
+    * is a no-op. Every `compactEvery`-th applied batch compacts the
+    * index in-stream ([[graft.engine.PersistedIndex.ingest]]). */
   def pqIndexIngest(vectors: DataFrame, idCol: String, vecCol: String,
                     table: String, dim: Int, m: Int = 4,
                     buckets: Int = 8, checkpoint: String,
                     compactEvery: Int = 0): StreamingQuery =
-    vectors.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val applied = idempotentPqAppend(batch, id, checkpoint, idCol,
-          vecCol, table, dim, m, buckets)
-        if (applied) maintainEvery(batch.sparkSession, table, checkpoint,
-          compactEvery)(s => graft.operators.Similarity.compactIndex(s, table))
-      }
-      .start()
+    PersistedIndex.ingest(vectors, table, checkpoint, compactEvery,
+        graft.operators.Similarity.compactIndex(_, table)) {
+      (batch, id) => idempotentPqAppend(batch, id, checkpoint, idCol,
+        vecCol, table, dim, m, buckets)
+    }
 
-  /** Apply one micro-batch to the PQ index EXACTLY ONCE per batch id:
-    * foreachBatch is at-least-once — a failure between the index
-    * append and the checkpoint commit redelivers the batch on restart,
-    * which would duplicate (nid, code) rows and change top-k output
-    * (ADVICE r13). Applied batch ids are recorded in a `_batches`
-    * sidecar table checked BEFORE appending, so a redelivered id is a
-    * no-op; the unprotected window shrinks to a crash between the
-    * index append and the one-row sidecar write (the residual gap any
-    * non-transactional two-table commit has — Spark's own foreachBatch
-    * docs prescribe exactly this batchId-dedup discipline; a
-    * transactional store is the upgrade path). */
+  /** Apply one micro-batch to the PQ index EXACTLY ONCE per batch id
+    * ([[graft.engine.PersistedIndex.applyOnce]]): a redelivered id
+    * would otherwise duplicate (nid, code) rows and change top-k
+    * output (ADVICE r13). */
   private[graft] def idempotentPqAppend(batch: DataFrame, batchId: Long,
                                         scope: String,
                                         idCol: String, vecCol: String,
                                         table: String, dim: Int, m: Int,
                                         buckets: Int): Boolean =
-    idempotentAppend(batch, batchId, scope, table) { spark =>
+    PersistedIndex.applyOnce(batch, batchId, scope, table) { spark =>
       graft.operators.Similarity.appendPqIndex(spark, batch, idCol,
         vecCol, table, dim, m, buckets)
     }
@@ -374,85 +353,19 @@ object EventStream {
                       table: String, buckets: Int = 8,
                       checkpoint: String,
                       compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val applied = idempotentBm25Append(batch, id, checkpoint, idCol,
-          textCol, table, buckets)
-        if (applied) maintainEvery(batch.sparkSession, table, checkpoint,
-          compactEvery)(s => graft.operators.Retrieval.compactBm25Index(s, table))
-      }
-      .start()
+    PersistedIndex.ingest(docs, table, checkpoint, compactEvery,
+        graft.operators.Retrieval.compactBm25Index(_, table)) { (batch, id) =>
+      idempotentBm25Append(batch, id, checkpoint, idCol, textCol, table,
+        buckets)
+    }
 
   private[graft] def idempotentBm25Append(batch: DataFrame, batchId: Long,
                                           scope: String,
                                           idCol: String, textCol: String,
                                           table: String,
                                           buckets: Int): Boolean =
-    idempotentAppend(batch, batchId, scope, table) { spark =>
+    PersistedIndex.applyOnce(batch, batchId, scope, table) { spark =>
       graft.operators.Retrieval.appendBm25Index(spark, batch, idCol,
         textCol, table, buckets)
     }
-
-  /** In-stream index maintenance (r14 verdict #4): without this the
-    * ingest streams decay their own bucket-pruned layout forever — one
-    * file per bucket per micro-batch, ~3,000 files/bucket after a
-    * month of 15-minute triggers, and nothing inside the stream ever
-    * restores it. Every `compactEvery`-th APPLIED batch (counted from
-    * this stream's rows of the `_batches` ledger — deterministic under
-    * redelivery, which never reaches here) runs the index's compaction:
-    * the crash-safe staged swap, so queries between triggers stay
-    * consistent and the ledger sidecar — its own table — survives.
-    * 0 disables (the operator owns the cadence instead). */
-  private def maintainEvery(spark: SparkSession, table: String,
-                            scope: String, compactEvery: Int)
-                           (compact: SparkSession => Unit): Unit =
-    if (compactEvery > 0) {
-      val applied = spark.table(s"${table}_batches")
-        .filter(col("scope") === scope).count()
-      if (applied % compactEvery == 0) compact(spark)
-    }
-
-  /** Shared at-least-once guard: run `apply` exactly once per
-    * (table, scope, batchId), recording applied ids in the `_batches`
-    * sidecar checked BEFORE applying — a redelivered id is a no-op.
-    * Returns whether the batch applied (false = redelivery skip /
-    * empty batch). The dedup key is SCOPED by the stream's checkpoint
-    * path (ADVICE r14): a bare batchId collides the moment a second
-    * stream — or a fresh-checkpoint restart after a rebuild — feeds
-    * the same table, since Structured Streaming numbers each query's
-    * batches from 0; the checkpoint is precisely the identity that
-    * owns that numbering (stable across restarts of the SAME stream,
-    * distinct for a new one; rebuilds additionally drop the ledger via
-    * [[graft.operators.Similarity.dropIndexSidecars]]). The
-    * unprotected window shrinks to a crash between the apply and the
-    * one-row sidecar write (the residual gap any non-transactional
-    * two-table commit has — Spark's own foreachBatch docs prescribe
-    * exactly this batchId-dedup discipline; a transactional store is
-    * the upgrade path). */
-  private def idempotentAppend(batch: DataFrame, batchId: Long,
-                               scope: String, table: String)
-                              (apply: SparkSession => Unit): Boolean = {
-    if (batch.isEmpty) return false
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val sidecar = s"${table}_batches"
-    val applied = spark.catalog.tableExists(sidecar) &&
-      !spark.table(sidecar)
-        .filter(col("scope") === scope && col("batch_id") === batchId)
-        .isEmpty
-    if (!applied) {
-      apply(spark)
-      val row = Seq((scope, batchId)).toDF("scope", "batch_id")
-      if (spark.catalog.tableExists(sidecar))
-        row.write.mode("append").format("parquet").saveAsTable(sidecar)
-      else {
-        val base = graft.operators.Similarity.indexBasePath(spark, table)
-        row.write.mode("overwrite").format("parquet")
-          .option("path", s"${base}_batches").saveAsTable(sidecar)
-      }
-    }
-    !applied
-  }
 }
